@@ -25,11 +25,13 @@ CHECKSUMS = BENCH_DIR / "checksums.json"
 
 
 def _oracle_check():
-    # imported after ezdata_spark, so that module's own sys.path entry
-    # cannot change where ezdata_spark is imported from
+    # the module puts its own entry on sys.path when imported; keep ours,
+    # so later imports still resolve inside this checkout
+    saved = list(sys.path)
     sys.path.insert(0, str(ROOT / "tests"))
     import oracle_check
 
+    sys.path[:] = saved
     return oracle_check
 
 
