@@ -83,6 +83,11 @@ class Checker:
     def oracle_seconds(self) -> float:
         return self.con.seconds
 
+    def close(self) -> None:
+        """Drop the oracle's connection, so its memory is not counted in
+        the program's RSS."""
+        self.con.con.close()
+
     def check(self, spark, name: str, fn) -> str | None:
         """Run ``fn`` and return None when its result is right, or what
         is wrong with it."""

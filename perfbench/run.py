@@ -1,6 +1,6 @@
 """Closed-loop benchmark of ezdata_spark workloads.
 
-    python3 perfbench/run.py --workload interactive --seed 1 --seconds 20 --trace 0
+    python3 perfbench/run.py --workload interactive --seed 1 --seconds 16 --trace 0
 
 One client in one process runs a workload's catalog queries on
 ``local[<cpus of this process>]``.  Each query is built through
@@ -31,6 +31,7 @@ T_START = time.perf_counter()
 import argparse  # noqa: E402
 import contextlib  # noqa: E402
 import dataclasses  # noqa: E402
+import gc  # noqa: E402
 import json  # noqa: E402
 import os  # noqa: E402
 import random  # noqa: E402
@@ -308,21 +309,21 @@ def end_to_end(latencies, walls, setup_s, rss_mb) -> tuple[dict, str]:
 
 def tree_rss_mb(spark) -> float:
     """Process-tree RSS after a full GC.  G1 hands the freed heap back to
-    the OS on a background thread, in steps, so wait until the RSS has
-    held within 1 % for a second (at most 6 s) before taking the
-    reading."""
+    the OS on a background thread, in steps, and a further full GC
+    shrinks the heap again; so collect, wait a second and read, until
+    the reading holds within 1 % (at most 6 rounds)."""
     import bench
 
-    spark._jvm.System.gc()
-    time.sleep(1.0)
-    rss = bench._tree_rss_mb()
-    for _ in range(5):
+    gc.collect()
+    rss = None
+    for _ in range(6):
+        spark._jvm.System.gc()
         time.sleep(1.0)
         now = bench._tree_rss_mb()
-        if now >= 0.99 * rss:
-            return float(now)
+        if rss is not None and now >= 0.99 * rss:
+            break
         rss = now
-    return float(rss)
+    return float(now)
 
 
 def run(workload_name: str, seed: int, seconds: float, trace: bool, spec: dict,
@@ -345,6 +346,10 @@ def run(workload_name: str, seed: int, seconds: float, trace: bool, spec: dict,
             t1 = time.perf_counter()
             jvm_warmup(spark)
             run.check_pass(checker)
+            checker.close()
+            # the checking pass is the first call of every query; one
+            # more pass lets the JIT catch up before anything is timed
+            run.plain_pass(defaultdict(list))
             # the DuckDB oracle's own time is not the program's set-up
             session_warm_s = time.perf_counter() - t1 - checker.oracle_seconds
             setup_s = time.perf_counter() - T_START - checker.oracle_seconds
