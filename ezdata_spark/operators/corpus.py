@@ -61,9 +61,9 @@ def word_ngram_hashes(text, n: int) -> Column:
     as :func:`word_ngrams` but each pass folds the hash —
     ``hash(...hash(hash(t1, t2), t3)..., tn)`` — a deterministic
     injective-modulo-collisions map of the token tuple, the same
-    accepted collision class as ``xxhash64(space-joined gram)`` (which
-    it replaces as the ``hash_ngrams`` join key in
-    :func:`decontaminate`); per-gram concat allocations disappear."""
+    accepted collision class as ``xxhash64(space-joined gram)``, and the
+    gram id :func:`decontaminate` joins on; per-gram concat allocations
+    disappear."""
     t = tokens(text)
     if n == 1:
         return F.transform(t, lambda w: F.xxhash64(w))
@@ -80,7 +80,6 @@ def decontaminate(
     text: str = "text",
     id_col: str = "doc_id",
     n: int = 8,
-    hash_ngrams: bool = False,
     prefilter: str | None = None,
     bloom_bits_per_gram: int = 16,
 ) -> DataFrame:
@@ -89,74 +88,46 @@ def decontaminate(
     overlap test used before pretraining; n=8..13 in practice).
 
     Returns ``docs`` + ``n_hit`` (distinct contaminated n-grams per doc)
-    + ``contaminated``. Scale shape: both sides reduce to DISTINCT
-    (id, ngram) pairs before the equi-join, so the shuffle carries
-    distinct n-grams, not positions; the benchmark side is a distinct
-    n-gram set (typically thousands of rows -> auto-broadcast). With
-    ``hash_ngrams=True`` the join key is xxhash64(ngram) — 8 bytes
-    instead of the string — for the 100 TB run (oracle queries keep
-    strings so DuckDB can replicate).
+    + ``contaminated``. Scale shape: both sides explode 64-bit n-gram
+    ids (:func:`word_ngram_hashes` — gram strings never materialize) and
+    reduce to DISTINCT (id, ngram) pairs before the equi-join, so the
+    shuffle carries 8-byte distinct n-grams, not positions or text; the
+    benchmark side is a distinct id set (typically thousands of rows ->
+    auto-broadcast). Exact modulo xxhash64 collisions, which both sides
+    share consistently.
 
     ``prefilter='bloom'`` inserts a map-side Bloom screen BEFORE the
     doc-side distinct — the dominant cost at corpus scale is that
     distinct's shuffle of every doc n-gram, and almost none of them can
-    match a bounded benchmark set. The benchmark's distinct grams fold
+    match a bounded benchmark set. The benchmark's distinct ids fold
     into a bit array literal (``bloom_bits_per_gram`` bits each, 7
     xxhash64-seeded probes; ~2 MB per million grams) evaluated inside
-    whole-stage codegen, so only probable hits reach the shuffle.
-    With string keys (``hash_ngrams=False``) the RESULT IS
-    BIT-IDENTICAL to the exact path: a Bloom filter has no false
-    negatives by construction (every inserted gram sets the same bits
-    the probe tests), and false positives (~0.1% at 16 bits/gram) only
-    pass extra grams through to the exact equi-join, which discards
-    them. With ``hash_ngrams=True`` the guarantee is identical only up
-    to xxhash64 collisions: the Bloom screens on gram STRINGS while
-    the join matches 64-bit hashes, so a doc gram that collides with a
-    benchmark gram's hash without sharing its text would be counted by
-    the hashed exact path but (correctly) screened out here — i.e. the
-    Bloom variant is the MORE accurate of the two hashed forms, and
-    the string path is the bit-identity reference. Requires a driver-side collect of the
-    benchmark's distinct-gram BIT POSITIONS (not the grams) — the same
-    bounded-benchmark contract as ``decontaminate_stateless``.
+    whole-stage codegen, so only probable hits reach the shuffle. The
+    RESULT EQUALS the unscreened path by construction: the filter is
+    built and probed on the same ids the join matches, a Bloom filter
+    has no false negatives (every inserted id sets the bits the probe
+    tests), and false positives (~0.1% at 16 bits/gram) only pass extra
+    ids through to the equi-join, which discards them. Requires a
+    driver-side collect of the benchmark's distinct-gram BIT POSITIONS
+    (not the grams) — the same bounded-benchmark contract as
+    ``decontaminate_stateless``.
     """
     if prefilter not in (None, "bloom"):
         raise ValueError(f"decontaminate: unknown prefilter {prefilter!r}")
-    if hash_ngrams and prefilter is None:
-        # hash at construction (r15): both sides explode the zip_with-
-        # folded xxhash64 of the token tuple directly — gram strings
-        # never materialize (word_ngram_hashes); same consistent-
-        # both-sides collision contract as hashing the strings. The
-        # bloom path keeps strings: its screen probes the string grams.
-        key = lambda c: c
-        gram_arr = word_ngram_hashes(text, n)
-    else:
-        key = (lambda c: F.xxhash64(c)) if hash_ngrams else (lambda c: c)
-        gram_arr = word_ngrams(text, n)
-    doc_grams_raw = docs.select(
-        F.col(id_col), F.explode(gram_arr).alias("ng")
-    )
-    bench_explode = benchmark.select(F.explode(gram_arr).alias("ng"))
+    gram_arr = word_ngram_hashes(text, n)
+    doc_grams = docs.select(F.col(id_col), F.explode(gram_arr).alias("ng"))
+    bench_grams = benchmark.select(F.explode(gram_arr).alias("ng")).distinct()
     if prefilter == "bloom":
-        # the build runs two jobs over the benchmark grams (count +
+        # the build runs two jobs over the benchmark ids (count +
         # position collect) and the equi-join reads them a third time —
-        # cache the bounded distinct string set across all three
-        bench_src = track(bench_explode.distinct())
-        doc_grams_raw = doc_grams_raw.where(
-            _bloom_test("ng", *_bloom_build(bench_src, "ng", bloom_bits_per_gram))
+        # cache the bounded distinct set across all three
+        bench_grams = track(bench_grams)
+        doc_grams = doc_grams.where(
+            _bloom_test("ng", *_bloom_build(bench_grams, "ng", bloom_bits_per_gram))
         )
-    else:
-        bench_src = bench_explode
-    doc_grams = doc_grams_raw.select(id_col, key(F.col("ng")).alias("ng")).distinct()
-    # distinct AFTER hashing: two distinct bench grams colliding to one
-    # xxhash64 must not produce duplicate join keys (they would double-
-    # count n_hit and break bit-identity with the string/oracle path).
-    # Skippable only in the bloom+string case, where bench_src is
-    # already distinct and key() is the identity.
-    bench_grams = bench_src.select(key(F.col("ng")).alias("ng"))
-    if hash_ngrams or prefilter != "bloom":
-        bench_grams = bench_grams.distinct()
     hits = (
-        doc_grams.join(bench_grams, "ng")
+        doc_grams.distinct()
+        .join(bench_grams, "ng")
         .groupBy(id_col)
         .agg(F.count(F.lit(1)).alias("n_hit"))
     )
@@ -185,14 +156,14 @@ def _bloom_build(grams: DataFrame, col: str, bits_per_gram: int) -> tuple[list[i
         # the bit array embeds as a plan literal in each of the 7
         # probes; past ~8M bits (≈0.5M benchmark grams at 16 b/g) that
         # is tens of MB of expression tree — at that size the
-        # "benchmark" is corpus-shaped and the exact hashed-key
-        # equi-join is the right tool (its shuffle is already
-        # candidate-bounded by the distinct gram set)
+        # "benchmark" is corpus-shaped and the unscreened equi-join is
+        # the right tool (its shuffle is already candidate-bounded by
+        # the distinct gram set)
         raise ValueError(
             f"decontaminate prefilter='bloom': benchmark has {n_grams} "
             f"distinct n-grams ({m_bits} filter bits) — too large for a "
-            "plan-literal Bloom; use the exact path (prefilter=None, "
-            "hash_ngrams=True) or lower bloom_bits_per_gram"
+            "plan-literal Bloom; use the unscreened path (prefilter=None) "
+            "or lower bloom_bits_per_gram"
         )
     pos_cols = [
         F.pmod(F.xxhash64(F.col(col), F.lit(s)), F.lit(m_bits)).alias(f"p{i}")
@@ -209,7 +180,7 @@ def _bloom_build(grams: DataFrame, col: str, bits_per_gram: int) -> tuple[list[i
 
 
 def _bloom_probe(g: Column, words: list[int], m_bits: int) -> Column:
-    """AND of the 7 bit probes on an arbitrary string expression ``g``
+    """AND of the 7 bit probes on an arbitrary expression ``g``
     (pure column DSL — getbit takes a computed position — so the probe
     composes into HOF lambdas for the per-row array form)."""
     import functools
@@ -938,8 +909,7 @@ def decontaminate_stateless(
 
     Use when the benchmark n-gram set is small enough to broadcast as a
     literal (typical eval suites: 10^4-10^6 n-grams); beyond that, the
-    static-frame `decontaminate` with `hash_ngrams=True` is the batch
-    path.
+    static-frame `decontaminate` is the batch path.
     """
     bench = F.array(*[F.lit(g) for g in sorted(set(bench_ngrams))])
     return docs.withColumn(
@@ -952,22 +922,20 @@ def incremental_new(
     history: DataFrame,
     on: str = "text",
     id_col: str = "doc_id",
-    hash_keys: bool = True,
 ) -> DataFrame:
     """Snapshot-delta dedup: rows of ``batch`` whose ``on`` value was
     never seen in ``history`` — the daily-crawl ingestion step (only
     genuinely new documents enter the pipeline; re-crawled pages drop).
     Within the batch itself, the lowest-id copy of each value is kept.
 
-    Scale shape: LEFT ANTI join, keyed on xxhash64(``on``) when
-    ``hash_keys`` (8-byte shuffle keys instead of document text; the
-    history side reduces to its DISTINCT key set first, so the shuffle
-    carries one row per distinct historical document, and the anti join
-    never materializes matches). With ``hash_keys=False`` the raw value
-    is the key (engine-neutral, oracle-checkable).
+    Scale shape: LEFT ANTI join keyed on xxhash64(``on``) — 8-byte
+    shuffle keys instead of document text; the history side reduces to
+    its DISTINCT key set first, so the shuffle carries one row per
+    distinct historical document, and the anti join never materializes
+    matches. Exact modulo xxhash64 collisions (a new document whose key
+    collides with a historical one is dropped).
     """
-    key = (lambda c: F.xxhash64(c)) if hash_keys else (lambda c: c)
-    seen = history.select(key(F.col(on)).alias("__k")).distinct()
+    seen = history.select(F.xxhash64(on).alias("__k")).distinct()
     w = Window.partitionBy(on)
     fresh = (
         batch.withColumn("__m", F.min(id_col).over(w))
@@ -975,7 +943,7 @@ def incremental_new(
         .drop("__m")
     )
     return (
-        fresh.withColumn("__k", key(F.col(on)))
+        fresh.withColumn("__k", F.xxhash64(on))
         .join(seen, "__k", "left_anti")
         .drop("__k")
     )
@@ -1030,14 +998,30 @@ def chunk_text(
     )
 
 
+def _span_keys(text_col: str, window: int) -> Column:
+    """64-bit keys of every ``window``-token span of a document, in
+    position order (empty when the doc is shorter than ``window``).
+
+    The span STRINGS are never built: each token hashes once, then the
+    window key is a rolling polynomial combine over the long array
+    (wrapping 64-bit arithmetic, ANSI off) — the zip_with cascade of
+    :func:`word_ngrams` on 8-byte longs instead of growing strings
+    (which churn ~18 GB of concat intermediates at a 30M-row corpus;
+    measured 42 s -> 21 s). Exact modulo 2^-64 collisions."""
+    th = F.transform(tokens(text_col), lambda x: F.xxhash64(x))
+    m = F.greatest(F.size(th) - window + 1, F.lit(0))
+    acc = F.slice(th, 1, m)
+    for i in range(2, window + 1):
+        acc = F.zip_with(acc, F.slice(th, i, m), lambda a, b: a * F.lit(1000003) + b)
+    return F.when(F.size(th) >= window, acc).otherwise(F.array().cast("array<bigint>"))
+
+
 def remove_duplicate_spans(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     window: int = 20,
     min_count: int = 2,
-    hash_grams: bool = False,
-    touched_gate: bool = True,
 ) -> DataFrame:
     """Exact duplicate-span removal — the distributed form of the
     suffix-array substring dedup of Lee et al., "Deduplicating Training
@@ -1047,20 +1031,19 @@ def remove_duplicate_spans(
     surviving tokens are rejoined in order.
 
     Plan shape: one explode to (doc, pos, token), one explode to
-    (doc, wpos, window-gram), a groupBy on the gram to find duplicated
-    windows (the only corpus-wide shuffle — ``hash_grams=True``
-    replaces the ~window x 6-byte gram strings with 8-byte xxhash64
-    keys for that shuffle AND the candidate join, the same trade as
-    ``decontaminate``; exact modulo 2^-64 collisions, so the small-sf
-    oracle keeps strings), a position-range explode to mark covered
+    (doc, wpos, window key), a groupBy on the key to find duplicated
+    windows (the only corpus-wide shuffle — it and the candidate join
+    carry 8-byte :func:`_span_keys` instead of ~window x 6-byte span
+    strings, the same trade as ``decontaminate``; exact modulo 2^-64
+    collisions), a position-range explode to mark covered
     tokens (distinct acts as the pre-shuffle combiner for overlapping
     windows), an anti-join, and one per-doc aggregate whose order is
     restored by array_sort (no collect_list-order dependence).
     Returns (id, kept_text, n_tokens_before, n_tokens_after).
 
     Measured stage breakdown (30M-sweep fixture: 3M docs x 20 tokens,
-    window=10, hash_grams=True, dedicated idle 16g JVM; cumulative
-    noop-sink timings): token explode 2.7 s; gram build + dup
+    window=10, dedicated idle 16g JVM; cumulative noop-sink timings):
+    token explode 2.7 s; gram build + dup
     aggregate 15.8 s (the zip_with cascade plus the one corpus-wide
     shuffle — irreducible per-byte work); covered-position join 14.7 s
     (ReuseExchange shares the gram exchange, so approximately the dup
@@ -1082,34 +1065,9 @@ def remove_duplicate_spans(
     tok = docs.select(
         F.col(id_col), F.posexplode(t).alias("pos", "tok")
     )
-    if hash_grams:
-        # Never build the gram STRINGS: hash each token once, then the
-        # window key is a rolling polynomial combine over the long
-        # array (wrapping 64-bit arithmetic, ANSI off) — the same
-        # zip_with cascade as word_ngrams but on 8-byte longs instead
-        # of growing strings (which churn ~18 GB of concat
-        # intermediates at a 30M-row corpus; measured 42s -> 21s).
-        # Key class is unchanged: 64-bit, exact modulo 2^-64 collisions.
-        th = F.transform(tokens(text_col), lambda x: F.xxhash64(x))
-        m = F.size(th) - window + 1
-        acc = F.slice(th, 1, F.greatest(m, F.lit(0)))
-        for i in range(2, window + 1):
-            acc = F.zip_with(
-                acc,
-                F.slice(th, i, F.greatest(m, F.lit(0))),
-                lambda a, b: a * F.lit(1000003) + b,
-            )
-        gram_keys = F.when(F.size(th) >= window, acc).otherwise(
-            F.array().cast("array<bigint>")
-        )
-        grams = docs.select(
-            F.col(id_col), F.posexplode(gram_keys).alias("wpos", "gram")
-        )
-    else:
-        grams = docs.select(
-            F.col(id_col),
-            F.posexplode(word_ngrams(text_col, window)).alias("wpos", "gram"),
-        )
+    grams = docs.select(
+        F.col(id_col), F.posexplode(_span_keys(text_col, window)).alias("wpos", "gram")
+    )
     # no persist: both consumers (dup aggregate, covered join) shuffle
     # this frame on `gram`, so ReuseExchange dedupes the computation
     # already — a cache only adds write overhead (measured)
@@ -1142,15 +1100,10 @@ def remove_duplicate_spans(
     # below) put that at ~half the operator. The touched-id list is
     # covered-id-bounded; AQE broadcasts the semi/anti joins when it is
     # small (the common case — most docs carry no corpus-wide repeated
-    # span), so the untouched path is shuffle-free.
-    # ``touched_gate=False`` restores the ungated shape (rebuild every
-    # doc): identical results, chosen per deployment — the gate is the
-    # right default at corpus scale (30M fixture: ~40% saved when most
-    # docs are untouched). On the sf0.1 template fixture the round-12
-    # idle ABBA A/B (BASELINE.md) measured only 8.3% of docs carrying a
-    # corpus-duplicated 20-token span — the every-doc-touched hypothesis
-    # was measured FALSE there, and gate ON vs OFF read
-    # free-to-helpful (ON medians 2.696/3.002 s vs OFF 2.797 s).
+    # span), so the untouched path is shuffle-free. 30M fixture: ~40%
+    # saved when most docs are untouched; on the sf0.1 template fixture
+    # (8.3% of docs touched) an idle ABBA read the gate free-to-helpful
+    # (medians 2.696/3.002 s vs 2.797 s ungated, BASELINE.md).
     touched = covered.select(id_col).distinct()
     # gate AFTER the anti-join, not before: a pre-anti semi pass would
     # re-scan all token rows against the touched-id table (measured
@@ -1158,9 +1111,9 @@ def remove_duplicate_spans(
     # filters the anti-join's survivors, which the rebuild was about to
     # shuffle anyway — so the gate costs one bounded pass in the worst
     # case and removes the rebuild entirely in the common one
-    kept = tok.join(covered, [id_col, "pos"], "left_anti")
-    if touched_gate:
-        kept = kept.join(touched, id_col, "left_semi")
+    kept = tok.join(covered, [id_col, "pos"], "left_anti").join(
+        touched, id_col, "left_semi"
+    )
     rebuilt = kept.groupBy(id_col).agg(
         F.array_join(
             F.transform(
@@ -1174,13 +1127,6 @@ def remove_duplicate_spans(
     base = docs.select(
         F.col(id_col), t.alias("_t"), F.size(t).alias("n_tokens_before")
     ).where(F.size(t) > 0)
-    if not touched_gate:
-        return base.join(rebuilt, id_col, "left").select(
-            F.col(id_col),
-            F.coalesce("kept_text", F.lit("")).alias("kept_text"),
-            "n_tokens_before",
-            F.coalesce("n_tokens_after", F.lit(0)).alias("n_tokens_after"),
-        )
     touched_out = (
         base.join(touched, id_col, "left_semi")
         .join(rebuilt, id_col, "left")

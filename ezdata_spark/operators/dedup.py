@@ -758,34 +758,25 @@ def fuzzy_pairs(strings: DataFrame, col: str, max_dist: int = 1) -> DataFrame:
     ).where(F.col("dist") >= 0)
 
 
-def char_trigrams(text_col: str) -> Column:
-    """Distinct character trigrams of the lowercased text (pg_trgm
-    family, without padding). Built as two zip_with concat passes over
-    shifted char slices — the word_ngrams idiom: a flat elementwise
-    concat beats the per-position `transform(..., i -> substring(...))`
-    HOF (which re-slices the string once per output gram) ~5x under
-    the interpreted lambda evaluator."""
-    t = F.split(F.lower(F.col(text_col)), "")
-    m = F.greatest(F.size(t) - 2, F.lit(0))
-    acc = F.zip_with(F.slice(t, 1, m), F.slice(t, 2, m), lambda a, b: F.concat(a, b))
-    acc = F.zip_with(acc, F.slice(t, 3, m), lambda a, b: F.concat(a, b))
-    return F.array_distinct(acc)
-
-
 def _gram_hash_set(text_col: str, unit) -> Column:
-    """Distinct xxhash64'd gram set — the ``hash_verify=True`` twin of
-    :func:`_gram_set` that never materializes gram strings (r15, guide
-    §2.3 applied to compute): char trigrams fold through two elementwise
-    ``xxhash64`` passes over the shifted char slices (hash(hash(c1, c2),
-    c3) — a deterministic injective-modulo-collisions map of the triple,
-    the same accepted collision class as hashing the concatenated
-    string), words/shingles hash before the distinct. The win is
-    ``array_distinct`` running on LONGS: Spark's primitive-specialized
-    path, versus the per-doc quadratic string-equality scan — measured
-    ~3x on the q132 gram-set build, the similarity join's single biggest
-    stage. Hash VALUES differ from ``xxhash64(gram_string)``, but every
-    consumer treats the hash as an opaque gram id, and prefix filtering
-    is exact under ANY global gram order, so final pairs are identical."""
+    """Distinct gram set of a document for the similarity join, as
+    xxhash64 gram ids — gram strings never materialize. ``"char3"`` =
+    character trigrams of the lowercased text (pg_trgm, no padding),
+    folded through two elementwise ``xxhash64`` passes over the shifted
+    char slices (hash(hash(c1, c2), c3)); ``"word"`` = word tokens; an
+    int n = space-joined word n-shingles. Char trigrams fit SHORT
+    strings (names, titles): their universe is alphabet^3, so at corpus
+    scale every gram is frequent. Long-document joins should run on
+    word/shingle units, whose rare-token tail is what makes prefix
+    filtering effective (the token-set setting of the AllPairs/PPJoin
+    papers).
+
+    ``array_distinct`` runs its primitive-long path instead of the
+    per-doc quadratic string-equality scan (measured ~3x on the q132
+    gram-set build). Every consumer treats the hash as an opaque gram
+    id, and prefix filtering is exact under ANY global gram order; two
+    distinct grams colliding to one id merge consistently everywhere
+    (probability ~|vocab|^2 / 2^65)."""
     if unit == "char3":
         t = F.split(F.lower(F.col(text_col)), "")
         m = F.greatest(F.size(t) - 2, F.lit(0))
@@ -799,6 +790,9 @@ def _gram_hash_set(text_col: str, unit) -> Column:
         return F.array_distinct(F.transform(toks, lambda w: F.xxhash64(w)))
     n = int(unit)
     m = F.size(toks) - (n - 1)
+    # guard m >= 1: sequence(1, 0) is DESCENDING [1, 0] in Spark, which
+    # would fabricate partial shingles for docs shorter than n tokens —
+    # such docs have no n-shingles at all
     return F.array_distinct(
         F.when(
             m >= 1,
@@ -810,46 +804,13 @@ def _gram_hash_set(text_col: str, unit) -> Column:
     )
 
 
-def _gram_set(text_col: str, unit) -> Column:
-    """Distinct gram set of a document for the similarity join:
-    ``"char3"`` = character trigrams (pg_trgm), ``"word"`` = word
-    tokens, an int n = space-joined word n-shingles. Char trigrams fit
-    SHORT strings (names, titles): their universe is alphabet^3, so at
-    corpus scale every gram is frequent. Long-document similarity joins
-    should run on word/shingle units, whose rare-token tail is what
-    makes prefix filtering effective (the token-set setting of the
-    AllPairs/PPJoin papers)."""
-    if unit == "char3":
-        return char_trigrams(text_col)
-    toks = F.filter(F.split(F.lower(F.col(text_col)), r"\s+"), lambda t: t != "")
-    if unit == "word":
-        return F.array_distinct(toks)
-    n = int(unit)
-    m = F.size(toks) - (n - 1)
-    # guard m >= 1: sequence(1, 0) is DESCENDING [1, 0] in Spark, which
-    # would fabricate partial shingles for docs shorter than n tokens —
-    # such docs have no n-shingles at all
-    return F.array_distinct(
-        F.when(
-            m >= 1,
-            F.transform(
-                F.sequence(F.lit(1), m),
-                lambda i: F.array_join(F.slice(toks, i, n), " "),
-            ),
-        ).otherwise(F.expr("array()"))
-    )
-
-
 def trigram_similarity_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     threshold: float = 0.6,
-    broadcast_sets: bool = False,
-    hash_verify: bool = True,
     unit="char3",
     max_gram_df: int | str | None = "auto",
-    gram_df: str = "window",
 ) -> DataFrame:
     """Exact Jaccard similarity self-join on per-document gram sets
     (default: character trigrams, pg_trgm semantics) with PREFIX
@@ -871,25 +832,18 @@ def trigram_similarity_pairs(
 
     Returns (id_a, id_b, n_inter, n_a, n_b, jaccard) with id_a < id_b.
     Scale: shuffles carry prefix grams (rare by construction) and the
-    per-doc gram arrays for candidates only. ``broadcast_sets=True``
-    broadcasts the per-doc gram-set frame into both verify joins
-    instead of shuffling a ~2x1.7KB array payload per candidate —
-    the right call when the corpus (not the pair space) fits a
-    broadcast, e.g. the 5k-doc bench corpus; leave False at 100 TB
-    (AQE still broadcasts small verify sides from measured size).
-    ``hash_verify=True`` (default) runs the WHOLE join on xxhash64'd
-    grams: the explode emits 8-byte longs instead of gram strings, so
-    the frequency aggregate, the per-doc rank window, the prefix
-    candidate join, and the verify arrays all shuffle primitive longs
-    (Spark's long hash aggregate / array_intersect are ~2x the string
-    path, and the shuffled bytes drop by the mean gram length). A
-    global collision between two distinct grams (probability
-    ~|vocab|^2 / 2^65 — ~1e-5 at 20M distinct grams) merges them
-    consistently in candidates and verification, overcounting one
-    intersection slot for pairs holding both; set False for
-    strictly-exact string-gram verification.
+    per-doc gram arrays for candidates only (AQE broadcasts small
+    verify sides from their measured size). The WHOLE join runs on
+    xxhash64 gram ids (see ``_gram_hash_set``): the explode emits 8-byte
+    longs, so the frequency aggregate, the per-doc rank window, the
+    prefix candidate join, and the verify arrays all shuffle primitive
+    longs (Spark's long hash aggregate / array_intersect are ~2x the
+    string path). A global collision between two distinct grams
+    (probability ~|vocab|^2 / 2^65 — ~1e-5 at 20M distinct grams)
+    merges them consistently in candidates and verification,
+    overcounting one intersection slot for pairs holding both.
 
-    ``unit`` picks the gram vocabulary (see ``_gram_set``): char
+    ``unit`` picks the gram vocabulary (see ``_gram_hash_set``): char
     trigrams for short strings; ``"word"`` or an int shingle width for
     documents, where the rare-token tail keeps prefixes selective at
     corpus scale.
@@ -920,34 +874,22 @@ def trigram_similarity_pairs(
     regardless of profile (the oracle-checked mode); pass an int to
     pin the cap.
 
-    ``gram_df`` picks how the gram document frequency (the rank key)
-    reaches each gram row (r15, guide §2.4 — identical values and rank
+    The gram document frequency (the rank key) reaches each gram row by
+    one of two plans, chosen from ``unit`` (identical values and rank
     order either way):
 
-    - ``"window"`` (default, unbounded-vocabulary-safe): ``count(*)
-      over (partition by g)`` — one full exchange + sort of the gram
-      frame by g. Right when the distinct-gram table itself outgrows a
-      broadcast (word/shingle units over open vocabularies).
-    - ``"broadcast"``: a map-side-combined ``groupBy(g).count()``
-      (its exchange carries distinct grams only) broadcast-joined back
-      onto the gram frame, so the prefix build's only corpus-wide
-      exchange is the id one its rank windows need anyway — the full
-      gram frame crosses the wire twice total (prefix build + verify
-      set build) instead of three times, and the full-frame sort by g
-      never happens. Right when the DISTINCT gram table is bounded —
-      char trigrams (``unit='char3'``): at most |alphabet|^3 grams
-      exist no matter the corpus size, the same vocabulary-bounded
-      broadcast contract as the LM scoring joins (corpus.py)."""
-    if hash_verify:
-        # hash at the source — BEFORE the per-doc distinct (r15): every
-        # downstream frame (frequency agg, rank window, prefix join,
-        # verify sets) carries 8-byte longs instead of gram strings,
-        # same collision contract either way, and array_distinct runs
-        # its primitive-long path instead of the quadratic per-doc
-        # string-equality scan (see _gram_hash_set)
-        gs = _gram_hash_set(text_col, unit)
-    else:
-        gs = _gram_set(text_col, unit)
+    - char trigrams (``unit='char3'``): a map-side-combined
+      ``groupBy(g).count()`` (its exchange carries distinct grams only)
+      broadcast-joined back onto the gram frame, so the prefix build's
+      only corpus-wide exchange is the id one its rank windows need
+      anyway — the full-frame sort by g never happens. Safe because at
+      most |alphabet|^3 trigrams exist no matter the corpus size, the
+      same vocabulary-bounded broadcast contract as the LM scoring
+      joins (corpus.py).
+    - word/shingle units: ``count(*) over (partition by g)`` — one full
+      exchange + sort of the gram frame by g, since an open
+      vocabulary's distinct-gram table can outgrow any broadcast."""
+    gs = _gram_hash_set(text_col, unit)
     if max_gram_df == "auto":
         # Profile the df distribution on an INDEPENDENT, UNPERSISTED
         # plan (one extra explode+agg scan), then build the join. Do
@@ -975,8 +917,6 @@ def trigram_similarity_pairs(
         if max_gram_df is not None:
             # surface the data-dependent recall change (round-8 ADVICE):
             # callers see WHICH cap auto derived and can pin it / None
-            import warnings
-
             warnings.warn(
                 f"trigram_similarity_pairs: max_gram_df='auto' enabled a "
                 f"corpus-frequency cap of {max_gram_df} (p99 of gram df; "
@@ -988,7 +928,7 @@ def trigram_similarity_pairs(
                 stacklevel=2,
             )
     grams = (
-        # _gram_set is array_distinct per doc, so (id, g) is already
+        # _gram_hash_set is array_distinct per doc, so (id, g) is already
         # unique — no global distinct shuffle needed
         track(df.select(F.col(id_col).alias("id"), F.explode(gs).alias("g")))
     )
@@ -1005,43 +945,27 @@ def trigram_similarity_pairs(
         - F.ceil(F.lit(threshold) * F.col("ng") - F.lit(1e-9))
         + F.lit(1)
     )
-    # gc (gram document frequency) and ng (per-doc set size) ride WINDOW
-    # passes instead of two aggregate+join-back pairs (r15, guide §2.4):
-    # count(*) over (partition by g) is one exchange of the gram frame
-    # where the old groupBy(g)+join shuffled it twice (the partial agg
-    # barely combines — distinct grams per partition approach the row
-    # count — and at corpus scale the gram-frequency frame outgrows any
-    # broadcast, making the join-back a second full shuffle). The ng
-    # window shares the id exchange the rank window needs anyway.
-    # Values are identical by construction: (id, g) is unique, so the
-    # per-g window count IS the document frequency and the per-id count
-    # IS the set size, and the rank order (gc, g) within each id is
-    # unchanged.
-    if gram_df not in ("window", "broadcast"):
-        raise ValueError(
-            f"trigram_similarity_pairs: unknown gram_df {gram_df!r} "
-            "(expected 'window' or 'broadcast')"
-        )
-    if gram_df == "broadcast":
-        # df table = one map-side-combined aggregate (the exchange
-        # carries distinct grams only — vocabulary-bounded), broadcast
-        # back: the prefix build's only full gram-frame exchange is
-        # the id one the rank windows need anyway — the Exchange+sort
-        # by g of the window form never happens
+    # gc (gram document frequency) and ng (per-doc set size): (id, g) is
+    # unique, so the per-g count IS the document frequency and the
+    # per-id window count IS the set size. char3's vocabulary is bounded
+    # (alphabet^3), so its df table is one map-side-combined aggregate
+    # broadcast back — the Exchange+sort of the gram frame by g never
+    # happens. Open vocabularies (word/shingle) take the window, whose
+    # exchange carries the gram frame once where a groupBy+join-back
+    # would shuffle it twice. The ng window shares the id exchange the
+    # rank window needs anyway.
+    if unit == "char3":
         gdf = grams.groupBy("g").agg(F.count(F.lit(1)).alias("gc"))
-        prefix = (
-            grams.join(F.broadcast(gdf), "g")
-            .withColumn("ng", F.count(F.lit(1)).over(Window.partitionBy("id")))
-            .withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") <= prefix_len)
-        )
+        with_gc = grams.join(F.broadcast(gdf), "g")
     else:
-        prefix = (
-            grams.withColumn("gc", F.count(F.lit(1)).over(Window.partitionBy("g")))
-            .withColumn("ng", F.count(F.lit(1)).over(Window.partitionBy("id")))
-            .withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") <= prefix_len)
+        with_gc = grams.withColumn(
+            "gc", F.count(F.lit(1)).over(Window.partitionBy("g"))
         )
+    prefix = (
+        with_gc.withColumn("ng", F.count(F.lit(1)).over(Window.partitionBy("id")))
+        .withColumn("rn", F.row_number().over(w))
+        .where(F.col("rn") <= prefix_len)
+    )
     if max_gram_df is not None:
         # rn stays ranked over the FULL order so the positional filter
         # keeps its meaning; the cap only removes frequent grams from
@@ -1106,8 +1030,8 @@ def trigram_similarity_pairs(
         .select("id_a", "id_b", "n_a", "n_b")
     )
     # PROGRESSIVE VERIFICATION (r14, measured 3.2x on the verify stage):
-    # each doc's gram set is split into two halves by a deterministic
-    # hash sign, so n_inter = |A0∩B0| + |A1∩B1| exactly (the split
+    # each doc's gram set is split into two halves by the gram id's
+    # sign, so n_inter = |A0∩B0| + |A1∩B1| exactly (the split
     # partitions the gram universe, and per-doc sets are distinct).
     # The verify intersects HALF the width first, then prunes on the
     # exact bound  i0 + min(|A1|,|B1|) >= min_overlap  before paying
@@ -1120,16 +1044,14 @@ def trigram_similarity_pairs(
     # full candidate set with bit-identical output. Deeper cascades
     # were measured SLOWER (quarter-split 3.6 s: two extra intersect
     # calls per surviving row outweigh the extra pruning).
-    split = (lambda x: x < 0) if hash_verify else (lambda x: F.xxhash64(x) < 0)
-    gs_col = F.collect_set("gv").alias("_gs")
     sets = track(
         grams.select("id", F.col("g").alias("gv"))
         .groupBy("id")
-        .agg(gs_col)
+        .agg(F.collect_set("gv").alias("_gs"))
         .select(
             "id",
-            F.filter("_gs", split).alias("h0"),
-            F.filter("_gs", lambda x: ~split(x)).alias("h1"),
+            F.filter("_gs", lambda x: x < 0).alias("h0"),
+            F.filter("_gs", lambda x: ~(x < 0)).alias("h1"),
         )
     )
     sa_ = sets.select(
@@ -1138,8 +1060,6 @@ def trigram_similarity_pairs(
     sb_ = sets.select(
         F.col("id").alias("id_b"), F.col("h0").alias("b0"), F.col("h1").alias("b1")
     )
-    if broadcast_sets:
-        sa_, sb_ = F.broadcast(sa_), F.broadcast(sb_)
     verified = (
         cand.join(sa_, "id_a")
         .join(sb_, "id_b")

@@ -1580,8 +1580,9 @@ def _train_sample(
     offsets) instead of toPandas().tolist(), which materializes a
     Python list per row before numpy re-packs them; bit-identical
     doubles either way (same IEEE buffer, no Python float round-trip).
-    Ragged or null-holding samples (never produced by normalize, but
-    the contract is defensive) fall back to the row-list path."""
+    Ragged samples, null vectors and vectors holding null elements
+    (never produced by normalize, but the contract is defensive) fall
+    back to the row-list path, where a null element reads as NaN."""
     n = normalize(df, vec, "v").select("v")
     if sample_fraction is not None:
         n = n.sample(sample_fraction, seed=seed)
@@ -1596,7 +1597,12 @@ def _train_sample(
         return np.asarray([], dtype=np.float64)
     try:
         widths = np.diff(col.offsets.to_numpy(zero_copy_only=False).astype(np.int64))
-        if col.null_count == 0 and widths.size and (widths == widths[0]).all():
+        if (
+            col.null_count == 0
+            and col.values.null_count == 0
+            and widths.size
+            and (widths == widths[0]).all()
+        ):
             flat = col.flatten().to_numpy(zero_copy_only=False)
             return flat.astype(np.float64, copy=True).reshape(len(col), int(widths[0]))
     except (AttributeError, NotImplementedError):

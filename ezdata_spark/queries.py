@@ -896,7 +896,7 @@ def q38(spark, sf_dir):
 
 
 @query("q73_healpix_column")
-def q39(spark, sf_dir):
+def q73(spark, sf_dir):
     """ang2pix NESTED healpix column (astro/astro.py:178-211) via
     Arrow-vectorized numpy pandas_udf; grouped into a count grid.
     Rows-only oracle (not SQL-expressible); pytest asserts the grid sums
@@ -1396,7 +1396,7 @@ def q84(spark, sf_dir):
 
 
 @query("q74_minhash_neardup")
-def q46(spark, sf_dir):
+def q74(spark, sf_dir):
     """MinHash+LSH near-duplicate pairs (shingle -> 64-slot signature ->
     16 bands -> bucket join -> estimated Jaccard >= 0.5). Rows-only
     oracle (xxhash64 is Spark-specific); pytest verifies against exact
@@ -1407,7 +1407,7 @@ def q46(spark, sf_dir):
 
 
 @query("q75_simhash")
-def q47(spark, sf_dir):
+def q75(spark, sf_dir):
     """64-bit SimHash fingerprints (token-hash bit votes); rows-only."""
     from .operators.dedup import simhash
 
@@ -1415,7 +1415,7 @@ def q47(spark, sf_dir):
 
 
 @query("q76_ngram_jaccard")
-def q48(spark, sf_dir):
+def q76(spark, sf_dir):
     """Exact 3-gram Jaccard on LSH candidate pairs only; rows-only."""
     from .operators.dedup import ngram_jaccard_pairs
 
@@ -1424,7 +1424,7 @@ def q48(spark, sf_dir):
 
 
 @query("q77_fingerprint")
-def q49(spark, sf_dir):
+def q77(spark, sf_dir):
     """Normalized-token-stream fingerprints; rows-only (xxhash64).
     Equal fingerprints == dedup-equivalent docs (case/whitespace
     insensitive)."""
@@ -1472,7 +1472,7 @@ def q50(spark, sf_dir):
 
 
 @query("q78_cosine_topk_lsh")
-def q51(spark, sf_dir):
+def q78(spark, sf_dir):
     """Approximate top-k via random-hyperplane LSH (4 tables x 8 planes),
     exact rescore of candidates. Rows-only oracle (approximate by
     design); pytest measures recall vs q50."""
@@ -1768,7 +1768,7 @@ def q57(spark, sf_dir):
 # =====================================================================
 
 @query("q79_media_features")
-def q58(spark, sf_dir):
+def q79(spark, sf_dir):
     """Image feature extraction over binary media columns via
     mapInPandas (operators/multimodal.py). The payloads here are
     synthetic (text bytes, not real containers), so the query OPTS
@@ -1786,7 +1786,7 @@ def q58(spark, sf_dir):
 
 
 @query("q80_frame_sample")
-def q59(spark, sf_dir):
+def q80(spark, sf_dir):
     """Video frame-sampling plumbing: posexplode of generated frame
     indices, no shuffle (operators/multimodal.py). Synthetic payloads
     -> explicit synthetic_fallback opt-in (real AVI sampling with
@@ -1838,7 +1838,7 @@ def q60(spark, sf_dir):
 
 
 @query("q81_ivf_ann")
-def q61(spark, sf_dir):
+def q81(spark, sf_dir):
     """IVF approximate nearest neighbors: KMeans coarse cells + nprobe
     search (operators/similarity.py). Rows-only (KMeans centroids are
     Spark-specific); pytest checks recall vs brute force."""
@@ -1854,7 +1854,7 @@ def q61(spark, sf_dir):
 
 
 @query("q82_audio_features")
-def q62(spark, sf_dir):
+def q82(spark, sf_dir):
     """Audio feature extraction over binary media (mapInPandas).
     Synthetic payloads -> explicit synthetic_fallback opt-in; every
     row is labelled decode_status='synthetic' (z100 exercises the
@@ -2211,19 +2211,18 @@ def q86(spark, sf_dir):
     """Benchmark decontamination: flag training docs sharing any word
     3-gram with a held-out set (doc_id % 97 == 0 stands in for the
     benchmark). Distinct (doc, ngram) on both sides before the
-    equi-join, so the shuffle never carries positions.
-    hash_ngrams=True (r15): the corpus-wide distinct and the equi-join
-    carry 8-byte xxhash64 keys instead of ~20-byte gram strings (guide
-    §2.3) — the same accepted collision class q109/q116/q132 ship;
-    ~8%% at sf0.1 where the shuffle is small, scaling with gram bytes.
-    A bloom prefilter (q86b's shape) was measured 2.5x SLOWER here —
-    its two build jobs dominate at a 1/97 benchmark fraction."""
+    equi-join, so the shuffle never carries positions. The corpus-wide
+    distinct and the equi-join carry 8-byte xxhash64 gram ids instead
+    of ~20-byte gram strings — the same accepted collision class
+    q109/q116/q132 ship, so the string-based DuckDB oracle still
+    applies. A bloom prefilter (q86b's shape) was measured 2.5x SLOWER
+    here — its two build jobs dominate at a 1/97 benchmark fraction."""
     from .operators.corpus import decontaminate
 
     docs = load(spark, sf_dir, "documents")
     bench = docs.filter(F.col("doc_id") % 97 == 0)
     train = docs.filter(F.col("doc_id") % 97 != 0)
-    return decontaminate(train, bench, n=3, hash_ngrams=True).select(
+    return decontaminate(train, bench, n=3).select(
         "doc_id", "n_hit", "contaminated"
     )
 
@@ -2252,13 +2251,14 @@ def q86(spark, sf_dir):
 )
 def q86b(spark, sf_dir):
     """q86 through the map-side BLOOM screen (corpus.py::decontaminate
-    prefilter='bloom'): the benchmark's distinct grams fold into a
+    prefilter='bloom'): the benchmark's distinct gram ids fold into a
     codegen bit-array literal tested BEFORE the doc-side distinct, so
     at corpus scale the dominant shuffle carries only probable hits
     (~0.1% fp at 16 bits/gram) instead of every doc n-gram. Same SQL
-    oracle as q86 — the Bloom has no false negatives and the exact
-    equi-join discards false positives, so the result is bit-identical
-    by construction (also pinned by pytest against the exact path)."""
+    oracle as q86 — the Bloom is built and probed on the ids the join
+    matches, has no false negatives, and the equi-join discards false
+    positives, so the result equals q86's by construction (also pinned
+    by pytest against a pure-Python reference)."""
     from .operators.corpus import decontaminate
 
     docs = load(spark, sf_dir, "documents")
@@ -2643,15 +2643,14 @@ def q94(spark, sf_dir):
 def q95(spark, sf_dir):
     """Snapshot-delta dedup: docs in the new batch (doc_id % 3 != 0)
     whose text never appeared in the history partition (doc_id % 3 == 0)
-    — left-anti join against the history's distinct key set, first-copy
-    wins within the batch. String keys here for the oracle; production
-    uses hash_keys=True (8-byte shuffle)."""
+    — left-anti join against the history's distinct xxhash64 key set
+    (8-byte shuffle keys), first-copy wins within the batch."""
     from .operators.corpus import incremental_new
 
     docs = load(spark, sf_dir, "documents")
     hist = docs.filter(F.col("doc_id") % 3 == 0)
     batch = docs.filter(F.col("doc_id") % 3 != 0)
-    return incremental_new(batch, hist, hash_keys=False).select("doc_id", "source")
+    return incremental_new(batch, hist).select("doc_id", "source")
 
 
 @query("z137_minhash_incremental")
@@ -4124,17 +4123,15 @@ def q116(spark, sf_dir):
     substring dedup of Lee et al., ACL 2022: every 20-token window
     occurring 2+ times corpus-wide is cut from every document and the
     survivors are rejoined in order. The only corpus-wide shuffle
-    groups on the window gram; r14 switches the declared query to the
-    hashed-gram path (8-byte xxhash64 rolling keys instead of ~120-byte
-    gram strings — exact modulo 2^-64 collisions, the same key class
-    q86/q132 already ship): measured 2x on the 30M-row fixture and ~7%
-    at sf0.1, equality verified row-for-row at sf0.1 and by the sf0.01
-    oracle. Per-doc reconstruction is order-restored by array_sort,
-    not collect order."""
+    groups on the window key: 8-byte xxhash64 rolling keys instead of
+    ~120-byte span strings — exact modulo 2^-64 collisions, the same
+    key class q86/q132 ship (measured 2x on the 30M-row fixture and ~7%
+    at sf0.1 against string keys). Per-doc reconstruction is
+    order-restored by array_sort, not collect order."""
     from .operators.corpus import remove_duplicate_spans
 
     docs = load(spark, sf_dir, "documents")
-    return remove_duplicate_spans(docs, window=20, min_count=2, hash_grams=True)
+    return remove_duplicate_spans(docs, window=20, min_count=2)
 
 
 @query(
@@ -4743,25 +4740,13 @@ def q132(spark, sf_dir):
     from .operators.dedup import trigram_similarity_pairs
 
     docs = load(spark, sf_dir, "documents")
-    # broadcast_sets stays False — the scale-correct default this query
-    # is the copy-paste template for. On a corpus that fits the
-    # autoBroadcastJoinThreshold, AQE broadcasts the verify side anyway
-    # from its MEASURED runtime size; at 100 TB the same code shuffles.
     # max_gram_df=None pins the EXACT mode the brute-force oracle
     # checks (the default 'auto' profiles the corpus and resolves to
     # None here anyway — char-trigram df is flat — but an oracle query
-    # must not let the data decide its own semantics).
-    # gram_df='broadcast' (r15): the rank key (gram document frequency)
-    # broadcasts from a map-combined aggregate instead of a full-frame
-    # window by g, and the windows + verify collect_set share ONE
-    # repartition(id) exchange — the corpus-wide gram frame crosses the
-    # wire once, not three times. Scale-safe HERE because char trigrams
-    # have a vocabulary-bounded distinct-gram table (|alphabet|^3 caps
-    # it regardless of corpus size); open-vocabulary units keep the
-    # 'window' default.
-    return trigram_similarity_pairs(
-        docs, threshold=0.8, max_gram_df=None, gram_df="broadcast"
-    )
+    # must not let the data decide its own semantics). Grams are
+    # xxhash64 ids, and char trigrams' bounded vocabulary broadcasts the
+    # gram document-frequency table (see trigram_similarity_pairs).
+    return trigram_similarity_pairs(docs, threshold=0.8, max_gram_df=None)
 
 
 @query("z133_audio_metadata")

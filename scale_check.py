@@ -346,8 +346,8 @@ def main() -> None:
     toks = docs.select("doc_id", token_count("text").alias("n_tokens"))
     run("pack_sequences", pack_sequences(toks, max_len=512), rows_in=doc_n)
 
-    # corpus curation tier (operators/corpus.py): decontamination with
-    # hashed join keys (the 100 TB form), LM scoring (persisted term
+    # corpus curation tier (operators/corpus.py): decontamination on
+    # 64-bit gram ids, LM scoring (persisted term
     # aggregate), caps/split/curate window + projection shapes
     from ezdata_spark.operators.corpus import (
         cap_per_key,
@@ -358,16 +358,13 @@ def main() -> None:
     )
 
     bench_docs = docs.filter(F.col("doc_id") % 1000 == 0)
-    run("decontaminate", decontaminate(docs, bench_docs, n=5, hash_ngrams=True),
-        rows_in=doc_n)
+    run("decontaminate", decontaminate(docs, bench_docs, n=5), rows_in=doc_n)
     # r10: same join, Bloom screen ahead of the doc-side distinct —
     # bit-identical output, the data-sized gram shuffle reduced to
     # probable hits (build-side position collect is part of the timing)
     run(
         "decontaminate_bloom",
-        lambda: decontaminate(
-            docs, bench_docs, n=5, hash_ngrams=True, prefilter="bloom"
-        ),
+        lambda: decontaminate(docs, bench_docs, n=5, prefilter="bloom"),
         rows_in=doc_n,
     )
     run("unigram_logprob", unigram_logprob(docs), rows_in=doc_n)
@@ -412,7 +409,7 @@ def main() -> None:
     from ezdata_spark.operators.corpus import remove_duplicate_spans
 
     run("dup_span_removal",
-        remove_duplicate_spans(docs, window=10, hash_grams=True), rows_in=doc_n)
+        remove_duplicate_spans(docs, window=10), rows_in=doc_n)
 
     # r12: corpus-scale BPE encode — merges learned UNTIMED on a
     # bounded sample (training is vocabulary-sized, the persisted-
@@ -1219,7 +1216,8 @@ def main() -> None:
         # from the df profile (p99 cap, enabled because max df is
         # >>10x the tail) and bound the join to the rare-suffix docs
         # out of the box (recall contract: all-boilerplate pairs are
-        # exact duplicates anyway — exact_dedup territory).
+        # exact duplicates anyway — exact_dedup territory). char3 takes
+        # the broadcast gram-df plan (vocabulary bounded by 62^3 here).
         ctri_n = max(n // 100, 300_000)
         alpha62 = "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789"
         suf = (
@@ -1426,13 +1424,12 @@ def main() -> None:
             "  row, O(n^2) per series).\n"
             "\nRound-7 similarity-join rows:\n"
             "- `sim_join_word` runs the AllPairs+PPJoin join at 3M docs\n"
-            "  on WORD units (broadcast_sets=False, hash_verify=True,\n"
-            "  t=0.8). Rarest-first prefixes land on per-group hash\n"
-            "  words, so the candidate join touches only true near-dup\n"
-            "  cliques; cost is linear in candidates (~3 true pairs per\n"
-            "  3-doc group). Word/shingle units are the corpus-scale\n"
-            "  configuration — the token-set setting of the AllPairs\n"
-            "  papers.\n"
+            "  on WORD units (t=0.8). Rarest-first prefixes land on\n"
+            "  per-group hash words, so the candidate join touches only\n"
+            "  true near-dup cliques; cost is linear in candidates (~3\n"
+            "  true pairs per 3-doc group). Word/shingle units are the\n"
+            "  corpus-scale configuration — the token-set setting of the\n"
+            "  AllPairs papers.\n"
             "- `sim_join_char3_auto` is the adversarial char-trigram\n"
             "  case: 10% pure-boilerplate docs whose identical prefixes\n"
             "  would alone join ~4.5e8 candidates. The DEFAULT\n"

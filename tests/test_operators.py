@@ -892,13 +892,11 @@ def test_decontaminate_known_overlap(spark):
     bench = spark.createDataFrame(
         [(99, "lazy quick brown fox sleeps")], "doc_id long, text string"
     )
+    # the join runs on 64-bit gram ids; the hand-counted string-gram
+    # overlap must come out unchanged
     got = {r.doc_id: (r.n_hit, r.contaminated)
            for r in decontaminate(train, bench, n=3).collect()}
     assert got == {1: (1, True), 2: (0, False), 3: (1, True), 4: (0, False)}
-
-    hashed = {r.doc_id: (r.n_hit, r.contaminated)
-              for r in decontaminate(train, bench, n=3, hash_ngrams=True).collect()}
-    assert hashed == got  # hashing the join key must not change the result
 
 
 def test_tfidf_matches_manual(spark):
@@ -1127,9 +1125,8 @@ def test_incremental_new_delta_dedup(spark):
         ],
         "doc_id long, text string",
     )
-    for hk in (True, False):
-        got = sorted(r.doc_id for r in incremental_new(batch, hist, hash_keys=hk).collect())
-        assert got == [2, 4], f"hash_keys={hk}"
+    got = sorted(r.doc_id for r in incremental_new(batch, hist).collect())
+    assert got == [2, 4]
 
 
 # ---------------------------------------------------------------------
@@ -2405,9 +2402,11 @@ def test_trigram_similarity_prefix_filter_vs_brute(spark):
 
 
 def test_dup_span_hash_grams_equivalent(spark):
-    """The rolling-hash gram path (hash_grams=True) removes exactly the
-    same spans as the string-gram path on a corpus with real cross-doc
-    and within-doc duplicate windows."""
+    """The rolling-hash window keys remove exactly the spans a
+    pure-Python string-span reference removes, on a corpus with real
+    cross-doc and within-doc duplicate windows."""
+    from collections import Counter
+
     from ezdata_spark.operators.corpus import remove_duplicate_spans
 
     boiler = "the quick brown fox jumps over the lazy dog again and again"
@@ -2418,13 +2417,24 @@ def test_dup_span_hash_grams_equivalent(spark):
         (4, f"{boiler} {boiler}"),  # within-doc repeat
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    a = {
-        r.doc_id: (r.kept_text, r.n_tokens_before, r.n_tokens_after)
-        for r in remove_duplicate_spans(df, window=5, hash_grams=False).collect()
-    }
+    w = 5
+    toks = {i: t.lower().split() for i, t in rows}
+    counts = Counter(
+        tuple(ts[p : p + w]) for ts in toks.values() for p in range(len(ts) - w + 1)
+    )
+    a = {}
+    for i, ts in toks.items():
+        cut = {
+            q
+            for p in range(len(ts) - w + 1)
+            if counts[tuple(ts[p : p + w])] >= 2
+            for q in range(p, p + w)
+        }
+        kept = [t for q, t in enumerate(ts) if q not in cut]
+        a[i] = (" ".join(kept), len(ts), len(kept))
     b = {
         r.doc_id: (r.kept_text, r.n_tokens_before, r.n_tokens_after)
-        for r in remove_duplicate_spans(df, window=5, hash_grams=True).collect()
+        for r in remove_duplicate_spans(df, window=w).collect()
     }
     assert a == b
     assert a[3][0].startswith("completely unique")  # untouched doc

@@ -508,8 +508,10 @@ def test_dup_span_gate_mixed_touched_untouched(spark):
 
 
 def test_dup_span_gate_hash_grams_parity(spark):
-    """hash_grams=True must produce identical output through the gated
-    pipeline (the gate sits downstream of both gram key forms)."""
+    """The rolling-hash window keys through the gated pipeline: the
+    touched docs lose exactly the shared 'words x0 .. x5' run (the two
+    duplicated 6-token windows cover positions 2..8), the unique docs
+    pass through whole."""
     from ezdata_spark.operators.corpus import remove_duplicate_spans
 
     span = " ".join(f"x{i}" for i in range(6))
@@ -517,9 +519,12 @@ def test_dup_span_gate_hash_grams_parity(spark):
     rows += [(10 + i, f"unique doc {i} " + " ".join(f"u{i}_{j}" for j in range(8)))
              for i in range(3)]
     docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    a = sorted(map(tuple, remove_duplicate_spans(docs, window=6).collect()))
-    b = sorted(map(tuple, remove_duplicate_spans(docs, window=6, hash_grams=True).collect()))
-    assert a == b and len(a) == 7
+    got = sorted(map(tuple, remove_duplicate_spans(docs, window=6).collect()))
+    want = sorted(
+        [(i, f"doc {i} tail{i} end", 11, 4) for i in range(4)]
+        + [(i, t, 11, 11) for i, t in rows[4:]]
+    )
+    assert got == want
 
 
 # --------------------------------- code-review: None group key member rows
@@ -1030,11 +1035,13 @@ def test_pca_then_ivf_composition(spark, sf_dir):
 
 
 def test_decontaminate_bloom_prefilter_bit_identical(spark, sf_dir):
-    """The Bloom-screened path must return EXACTLY the exact path's
-    result (no false negatives by construction; false positives die in
-    the exact equi-join), on both the string-key and hashed-key forms,
-    and the screen must actually drop the overwhelming share of
-    non-matching grams before the distinct's shuffle."""
+    """Both the unscreened and the Bloom-screened path must return
+    EXACTLY a pure-Python string-gram reference (the Bloom is built and
+    probed on the gram ids the join matches: no false negatives by
+    construction, false positives die in the equi-join), and the screen
+    must actually drop the overwhelming share of non-matching grams
+    before the distinct's shuffle."""
+    import re
     from ezdata_spark.operators.corpus import (
         _bloom_build,
         _bloom_test,
@@ -1046,25 +1053,29 @@ def test_decontaminate_bloom_prefilter_bit_identical(spark, sf_dir):
     bench = docs.filter(F.col("doc_id") % 97 == 0)
     train = docs.filter(F.col("doc_id") % 97 != 0)
     cols = ("doc_id", "n_hit", "contaminated")
-    want = sorted(map(tuple, decontaminate(train, bench, n=3).select(*cols).collect()))
-    got = sorted(
-        map(
-            tuple,
-            decontaminate(train, bench, n=3, prefilter="bloom").select(*cols).collect(),
-        )
-    )
-    assert got == want and len(want) > 0
-    hashed = sorted(
-        map(
-            tuple,
-            decontaminate(
-                train, bench, n=3, hash_ngrams=True, prefilter="bloom"
+
+    def grams3(text):
+        ts = [t for t in re.split(r"\s+", (text or "").lower(), flags=re.ASCII) if t]
+        return {" ".join(ts[i : i + 3]) for i in range(len(ts) - 2)}
+
+    texts = {r.doc_id: r.text for r in docs.select("doc_id", "text").collect()}
+    bench_set = set().union(*(grams3(t) for i, t in texts.items() if i % 97 == 0))
+    want = []
+    for i, t in sorted(texts.items()):
+        if i % 97 != 0:
+            hit = len(grams3(t) & bench_set)
+            want.append((i, hit, hit > 0))
+    assert any(c for _, _, c in want)
+    for prefilter in (None, "bloom"):
+        got = sorted(
+            map(
+                tuple,
+                decontaminate(train, bench, n=3, prefilter=prefilter)
+                .select(*cols)
+                .collect(),
             )
-            .select(*cols)
-            .collect(),
         )
-    )
-    assert hashed == want
+        assert got == want, prefilter
     # screen selectivity: with a DISJOINT benchmark, almost everything
     # must be dropped map-side (fp rate ~1e-3 at 16 bits/gram)
     fake_bench = spark.createDataFrame(

@@ -205,11 +205,11 @@ def test_normalize_era_gate():
 
 # ------------- q116 touched-doc gate A/B settle (r11 directive #1)
 def test_dup_span_removal_gate_off_equivalent(spark):
-    """touched_gate is a physical knob: ON (untouched docs skip the
-    rebuild) and OFF (pre-r10 rebuild-everything) must return
-    identical rows. The perf question was settled by idle fresh-JVM
-    A/B at sf0.1 (ABBA, 7 reps/JVM, 2026-08-16): gate ON medians
-    2.696/3.002 s vs OFF 2.797 s — the r11 bench's 2.03x raw reading
+    """The touched-doc gate (untouched docs skip the rebuild) must
+    return exactly the rows the rebuild-everything form would: hand-
+    derived below. The perf question was settled by idle fresh-JVM A/B
+    at sf0.1 (ABBA, 7 reps/JVM, 2026-08-16): gate on medians
+    2.696/3.002 s vs off 2.797 s — the r11 bench's 2.03x raw reading
     was host drift (that run's basket read 1.35x baseline-era), not
     gate overhead; only 8.3% of sf0.1 docs are span-touched, so the
     gate skips the rebuild for 92% of them."""
@@ -226,16 +226,14 @@ def test_dup_span_removal_gate_off_equivalent(spark):
     )
     kw = dict(window=5, min_count=2)
     on = {tuple(r) for r in remove_duplicate_spans(docs, **kw).collect()}
-    off = {
-        tuple(r)
-        for r in remove_duplicate_spans(docs, touched_gate=False, **kw).collect()
-    }
-    assert on == off and len(on) == 4
     # doc 3 is untouched; docs 1/4 share an 8-token span, doc 2 the
     # 5-token windows of 'a b c d e'
-    by_id = {r[0]: r for r in on}
-    assert by_id[3][1] == "p q r s t u v w"
-    assert by_id[1][3] < by_id[1][2]
+    assert on == {
+        (1, "", 8, 0),
+        (2, "x y z", 8, 3),
+        (3, "p q r s t u v w", 8, 8),
+        (4, "", 8, 0),
+    }
 
 
 # ---------------- z156 production ANN probe row (r11 directive #7)

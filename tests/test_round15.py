@@ -70,13 +70,19 @@ def test_train_sample_arrow_reshape_matches_tolist(spark):
     """r15: _train_sample converts the collected Arrow list column via
     one values-buffer flatten + reshape; must be bit-identical to the
     row-by-row toPandas().tolist() form (same hash order, same IEEE
-    doubles), including the ragged-input fallback and the empty frame."""
+    doubles), including the ragged-input fallback, a vector holding a
+    null element (row-list fallback: the null reads as NaN) and the
+    empty frame."""
     import numpy as np
 
     import ezdata_spark.operators.similarity as sim
 
     rows = [(i, [float(i) / 7.0 + j * 0.013 for j in range(6)]) for i in range(257)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>").repartition(5)
+    inner_null = spark.createDataFrame(
+        rows[:40] + [(999, [1.0, None, 2.0, 3.0, 4.0, 5.0])],
+        "vec_id long, embedding array<double>",
+    )
 
     def old(df_, vec, seed, frac, cap):
         n = sim.normalize(df_, vec, "v").select("v")
@@ -93,16 +99,22 @@ def test_train_sample_arrow_reshape_matches_tolist(spark):
         assert Xo.shape == Xn.shape
         assert np.array_equal(Xo, Xn)
 
+    Xo = old(inner_null, "embedding", 42, None, 100)
+    Xn = sim._train_sample(inner_null, "embedding", 42, None, 100)
+    assert Xn.shape == (41, 6)
+    assert np.isnan(Xn).any()
+    assert np.array_equal(Xo, Xn, equal_nan=True)
+
     empty = spark.createDataFrame([], "vec_id long, embedding array<double>")
     Xe = sim._train_sample(empty, "embedding", 42, None, 10)
     assert Xe.size == 0
 
 
 def test_trigram_gram_df_broadcast_matches_window(spark):
-    """r15: gram_df='broadcast' (map-combined df table broadcast onto
-    the gram frame; no full-frame window by g) must return exactly the
-    window form's pairs — the rank order (gc, g) is identical by
-    construction, so candidates, verification and output all match."""
+    """Both gram-frequency plans — the broadcast df table (``char3``,
+    bounded vocabulary) and the ``partitionBy(g)`` window (open
+    vocabularies: word units) — must return exactly the pairs of a
+    pure-Python brute-force Jaccard over the string grams."""
     from ezdata_spark.cache import release_caches
     from ezdata_spark.operators.dedup import trigram_similarity_pairs
 
@@ -116,26 +128,79 @@ def test_trigram_gram_df_broadcast_matches_window(spark):
         (7, ""),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string").repartition(3)
-    key = lambda r: (r.id_a, r.id_b)
-    for hv in (True, False):
-        got_w = sorted(
-            trigram_similarity_pairs(
-                df, threshold=0.5, max_gram_df=None, hash_verify=hv, gram_df="window"
-            ).collect(),
-            key=key,
-        )
-        release_caches()
-        got_b = sorted(
-            trigram_similarity_pairs(
-                df, threshold=0.5, max_gram_df=None, hash_verify=hv, gram_df="broadcast"
-            ).collect(),
-            key=key,
-        )
-        release_caches()
-        assert got_w == got_b
-        assert len(got_w) >= 2  # the near-dup pairs actually exist
 
-    import pytest as _pytest
+    def char3(s):
+        s = s.lower()
+        return {s[i : i + 3] for i in range(len(s) - 2)}
 
-    with _pytest.raises(ValueError, match="gram_df"):
-        trigram_similarity_pairs(df, gram_df="nope")
+    def words(s):
+        return set(s.lower().split())
+
+    for unit, grams in (("char3", char3), ("word", words)):
+        want = {}
+        for i, (ia, ta) in enumerate(rows):
+            for ib, tb in rows[i + 1 :]:
+                ga, gb = grams(ta), grams(tb)
+                if not ga or not gb:
+                    continue
+                inter = len(ga & gb)
+                j = round(inter / (len(ga) + len(gb) - inter), 6)
+                if j >= 0.5:
+                    want[(ia, ib)] = (inter, len(ga), len(gb), j)
+        got = {
+            (r.id_a, r.id_b): (r.n_inter, r.n_a, r.n_b, r.jaccard)
+            for r in trigram_similarity_pairs(
+                df, threshold=0.5, unit=unit, max_gram_df=None
+            ).collect()
+        }
+        release_caches()
+        assert got == want, unit
+        assert len(got) >= 2  # the near-dup pairs actually exist
+
+
+def test_gram_id_forms_collision_free_on_documents(spark, sf_dir):
+    """The 64-bit gram-id contract q132 (similarity join), q86
+    (decontamination) and q116 (span removal) rely on: on the sf0.01
+    documents, each id form yields exactly as many distinct ids as
+    there are distinct string grams (built here in pure Python) — no
+    two grams collide."""
+    import os
+    import re
+
+    from ezdata_spark.operators.corpus import _span_keys, word_ngram_hashes
+    from ezdata_spark.operators.dedup import _gram_hash_set
+
+    path = os.path.join(os.path.dirname(sf_dir), "sf0.01", "documents.parquet")
+    docs = spark.read.parquet(path)
+    char3, word3, span20 = set(), set(), set()
+    for r in docs.select("text").collect():
+        s = (r.text or "").lower()
+        char3.update(s[i : i + 3] for i in range(len(s) - 2))
+        ts = [t for t in re.split(r"\s+", s, flags=re.ASCII) if t]
+        word3.update(" ".join(ts[i : i + 3]) for i in range(len(ts) - 2))
+        span20.update(" ".join(ts[i : i + 20]) for i in range(len(ts) - 19))
+    assert min(len(char3), len(word3), len(span20)) > 300
+
+    def n_ids(arr):
+        return docs.select(F.explode(arr).alias("k")).distinct().count()
+
+    assert n_ids(_gram_hash_set("text", "char3")) == len(char3)
+    assert n_ids(word_ngram_hashes("text", 3)) == len(word3)
+    assert n_ids(_span_keys("text", 20)) == len(span20)
+
+
+def test_query_defs_have_unique_names():
+    """``@query`` keys the registry by its string name, so a repeated
+    top-level ``def`` name in queries.py silently shadows the earlier
+    function at module scope (pyflakes/ruff F811). Names must be unique."""
+    import ast
+    from collections import Counter
+    from pathlib import Path
+
+    import ezdata_spark.queries as queries
+
+    tree = ast.parse(Path(queries.__file__).read_text())
+    names = Counter(
+        n.name for n in tree.body if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+    )
+    assert sorted(k for k, c in names.items() if c > 1) == []

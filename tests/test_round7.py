@@ -109,9 +109,7 @@ def test_trigram_prefix_exact_bound(spark, threshold):
     )
     got = {
         (r.id_a, r.id_b)
-        for r in trigram_similarity_pairs(
-            df, threshold=threshold, broadcast_sets=True
-        ).collect()
+        for r in trigram_similarity_pairs(df, threshold=threshold).collect()
     }
     release_caches()
     want = _brute_pairs(texts, threshold)
@@ -161,7 +159,7 @@ def test_similarity_shingle_unit(spark):
     NO shingles (regression: sequence(1, 0) is descending in Spark and
     fabricated partial shingles)."""
     from ezdata_spark.cache import release_caches
-    from ezdata_spark.operators.dedup import _gram_set, trigram_similarity_pairs
+    from ezdata_spark.operators.dedup import _gram_hash_set, trigram_similarity_pairs
 
     df = spark.createDataFrame(
         [
@@ -173,10 +171,15 @@ def test_similarity_shingle_unit(spark):
     )
     g = {
         r.doc_id: sorted(r.g)
-        for r in df.select("doc_id", _gram_set("text", 3).alias("g")).collect()
+        for r in df.select("doc_id", _gram_hash_set("text", 3).alias("g")).collect()
     }
-    assert g[1] == ["a b c", "b c d", "c d e"]
-    assert g[2] == ["a b c", "b c d", "c d f"]
+
+    def ids(*shingles):
+        row = spark.range(1).select(*[F.xxhash64(F.lit(s)) for s in shingles]).first()
+        return sorted(row)
+
+    assert g[1] == ids("a b c", "b c d", "c d e")
+    assert g[2] == ids("a b c", "b c d", "c d f")
     assert g[3] == [] and g[4] == []
 
     out = trigram_similarity_pairs(df, threshold=0.6, unit=3).collect()
