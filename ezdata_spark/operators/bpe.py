@@ -3,21 +3,21 @@
 Classic byte-pair encoding (Sennrich et al. 2016, arXiv:1508.07909)
 with the sentencepiece-shaped split of work: the corpus is scanned
 ONCE to build the weighted distinct-word vocabulary (word, count) —
-the only corpus-sized job — and the merge LOOP then runs wherever
-:func:`learn_bpe`'s ``method`` routes it. The default (``auto``) is
-the r13 driver fold for vocabularies within a 2M-type budget:
-incremental pair-count maintenance with a lazy-invalidation max-heap
-argmax, so realistic merge counts (1024-32k) train in seconds-to-
-minutes with exact merge-for-merge parity to the distributed loop
-(pytest-pinned). The distributed loop — vocabulary-sized pair-count
-aggregate + 1-row driver round-trip + one greedy-fold projection PER
-MERGE, lineage cut by localCheckpoint — remains the exact fallback
-for too-big-to-collect vocabularies at small merge counts, and
-``overflow='prune'`` (frequency-threshold top-k, the
-sentencepiece/subword-nmt contract) covers big-vocab AND deep-merge.
-Encoding (:func:`encode_corpus` / :func:`encode_stream`) is
-vocabulary-sized per distinct word with a broadcast-dict or
-corpus-join application and a frozen-inventory unk contract.
+the only corpus-sized job — and the merge LOOP then runs where the
+vocabulary size puts it. A vocabulary within :func:`learn_bpe`'s
+``max_driver_vocab`` budget trains on the driver: incremental
+pair-count maintenance with a lazy-invalidation max-heap argmax, so
+realistic merge counts (1024-32k) train in seconds-to-minutes with
+exact merge-for-merge parity to the distributed loop (pytest-pinned).
+The distributed loop — vocabulary-sized pair-count aggregate + 1-row
+driver round-trip + one greedy-fold projection PER MERGE, lineage cut
+by localCheckpoint — is the exact fallback for too-big-to-collect
+vocabularies at small merge counts, and ``overflow='prune'``
+(frequency-threshold top-k, the sentencepiece/subword-nmt contract)
+covers big-vocab AND deep-merge. Encoding (:func:`encode_corpus` /
+:func:`encode_stream`) is vocabulary-sized per distinct word with a
+broadcast-dict or corpus-join application (picked by vocabulary size)
+and a frozen-inventory unk contract.
 """
 
 from __future__ import annotations
@@ -38,6 +38,9 @@ __all__ = [
 ]
 
 _EOW = "</w>"  # end-of-word marker, per the original BPE formulation
+# the distributed merge loop cuts its growing lambda lineage with a
+# localCheckpoint every this many merges
+_CHECKPOINT_EVERY = 8
 
 
 def _check_alphabet(where: str, alphabet: str) -> None:
@@ -230,8 +233,6 @@ def learn_bpe(
     docs: DataFrame,
     n_merges: int = 50,
     text: str = "text",
-    checkpoint_every: int = 8,
-    method: str = "auto",
     max_driver_vocab: int = 2_000_000,
     overflow: str = "distributed",
     alphabet: str = "char",
@@ -240,62 +241,51 @@ def learn_bpe(
     (ordered merge list, final segmented vocabulary frame).
 
     Ties on pair count break deterministically ((a, b) lexicographic),
-    so the merge sequence is reproducible across runs, methods, and
+    so the merge sequence is reproducible across runs, paths, and
     engines.
 
-    ``method`` picks where the merge LOOP runs (the corpus pass —
-    :func:`build_word_vocab` — is always distributed; this is the same
-    auto pattern as ``encode_corpus(method=...)``):
+    The corpus pass (:func:`build_word_vocab`) is always distributed;
+    the distinct-word count (one cheap count on the checkpointed
+    vocabulary) then picks where the merge LOOP runs:
 
-    - ``'driver'``: collect the distinct-word ``(symbols, count)``
-      vocabulary — driver-budget bounded by ``max_driver_vocab``, the
-      same class as the dict encode path's word map and PQ codebooks —
-      and run :func:`_train_bpe_driver`'s incremental-pair-count fold
-      (what sentencepiece does). This makes realistic merge counts
-      (32k-100k) tractable: per-merge cost is the total length of the
-      words containing the winning pair, not a cluster round-trip.
-    - ``'distributed'``: the vocabulary-frame loop — each round a
-      vocabulary-sized pair-count aggregate + a 1-row collect + a
-      merge-fold projection; localCheckpoint every ``checkpoint_every``
-      rounds cuts the growing lambda lineage. One driver round-trip
-      and one projection layer PER MERGE, so right for vocabularies
-      too large to collect but capped in practice at n_merges~O(100s).
-    - ``'auto'``: ``'driver'`` when the distinct-word count fits
-      ``max_driver_vocab``, else ``overflow``.
+    - within ``max_driver_vocab`` (the same driver-budget class as the
+      dict encode path's word map and PQ codebooks): collect the
+      ``(symbols, count)`` vocabulary and run :func:`_train_bpe_driver`'s
+      incremental-pair-count fold (what sentencepiece does). This makes
+      realistic merge counts (32k-100k) tractable: per-merge cost is
+      the total length of the words containing the winning pair, not a
+      cluster round-trip.
+    - over budget, ``overflow`` picks the policy:
 
-    ``overflow`` picks the policy when the vocabulary EXCEEDS
-    ``max_driver_vocab`` under ``'auto'``:
-
-    - ``'distributed'`` (default): the exact loop above — right when
-      the merge count is small enough to afford per-merge round-trips.
-    - ``'prune'``: train the driver fold on the ``max_driver_vocab``
-      HIGHEST-COUNT words (deterministic distributed top-k: count
-      desc, word asc) — what sentencepiece/subword-nmt do with their
-      frequency threshold. The dropped tail is singleton-heavy
-      (typos, URLs, ids) and contributes negligible pair mass, so the
-      learned merges track the full-vocabulary sequence closely
-      (agreement measured and pinned on a fixture, NOT exact parity —
-      this is the documented approximation that makes realistic merge
-      counts reachable at web-scale type counts where neither exact
-      path can: >budget types AND >O(100s) merges). Batched
-      distributed merge rounds were considered and rejected: a
-      symbol-disjoint batch rule degenerates to length 1-2 on natural
-      corpora because the top pairs share high-frequency symbols
-      ((t,h),(h,e),(e,_)...), so the round-trip count barely drops.
-      Under ``'prune'`` the returned segmented frame covers the
-      RETAINED vocabulary only; freezing ids from it maps symbols
-      seen only in dropped-tail words to ``unk_id`` at encode time —
-      the sentencepiece rare-symbol contract. (``encode_corpus``
-      without an explicit ``token_ids`` is unaffected: it derives the
-      inventory from the encoded corpus's own distinct words.)
-
-    ``'driver'`` and ``'distributed'`` return the same (merge list,
-    segmented vocabulary) bit-for-bit; parity is pytest-pinned.
-
-    An explicit ``method='driver'`` is still budget-checked: the
-    (cheap, checkpointed) distinct-word count must fit
-    ``max_driver_vocab`` or a descriptive ValueError is raised instead
-    of a driver OOM — raise the budget deliberately to bypass it.
+      - ``'distributed'`` (default): the vocabulary-frame loop — each
+        round a vocabulary-sized pair-count aggregate + a 1-row collect
+        + a merge-fold projection, with a localCheckpoint every
+        ``_CHECKPOINT_EVERY`` rounds to cut the growing lambda lineage.
+        One driver round-trip and one projection layer PER MERGE, so
+        right when the merge count is small enough to afford them
+        (O(100s)). It returns the same (merge list, segmented
+        vocabulary) as the driver fold bit-for-bit; parity is
+        pytest-pinned.
+      - ``'prune'``: train the driver fold on the ``max_driver_vocab``
+        HIGHEST-COUNT words (deterministic distributed top-k: count
+        desc, word asc) — what sentencepiece/subword-nmt do with their
+        frequency threshold. The dropped tail is singleton-heavy
+        (typos, URLs, ids) and contributes negligible pair mass, so the
+        learned merges track the full-vocabulary sequence closely
+        (agreement measured and pinned on a fixture, NOT exact parity —
+        this is the documented approximation that makes realistic merge
+        counts reachable at web-scale type counts where neither exact
+        path can: >budget types AND >O(100s) merges). Batched
+        distributed merge rounds were considered and rejected: a
+        symbol-disjoint batch rule degenerates to length 1-2 on natural
+        corpora because the top pairs share high-frequency symbols
+        ((t,h),(h,e),(e,_)...), so the round-trip count barely drops.
+        Under ``'prune'`` the returned segmented frame covers the
+        RETAINED vocabulary only; freezing ids from it maps symbols
+        seen only in dropped-tail words to ``unk_id`` at encode time —
+        the sentencepiece rare-symbol contract. (``encode_corpus``
+        without an explicit ``token_ids`` is unaffected: it derives the
+        inventory from the encoded corpus's own distinct words.)
 
     ``alphabet='byte'`` (r14): GPT-2-style byte-level BPE — base
     symbols are the UTF-8 bytes of each word (as 2-hex-digit strings),
@@ -306,50 +296,32 @@ def learn_bpe(
     only the base split and the inventory seeding differ.
     """
     _check_alphabet("learn_bpe", alphabet)
-    if method not in ("auto", "driver", "distributed"):
-        raise ValueError(
-            f"learn_bpe: unknown method {method!r} "
-            "(expected 'auto', 'driver', or 'distributed')"
-        )
     if overflow not in ("distributed", "prune"):
         raise ValueError(
             f"learn_bpe: unknown overflow {overflow!r} "
             "(expected 'distributed' or 'prune')"
         )
     vocab = build_word_vocab(docs, text, alphabet).localCheckpoint(eager=True)
-    if method == "driver":
-        n_types = vocab.count()
-        if n_types > max_driver_vocab:
-            raise ValueError(
-                f"learn_bpe: method='driver' would collect {n_types} "
-                f"distinct word types > max_driver_vocab={max_driver_vocab}; "
-                "raise max_driver_vocab explicitly, or use method='auto' "
-                "with overflow='prune'/'distributed'"
-            )
-    if method == "auto":
-        if vocab.count() <= max_driver_vocab:
-            method = "driver"
-        elif overflow == "prune":
-            from .window import global_row_id
+    on_driver = vocab.count() <= max_driver_vocab
+    if not on_driver and overflow == "prune":
+        from .window import global_row_id
 
-            # deterministic top-k without a single-partition global
-            # sort: range-partitioned 0-based rank on (count desc,
-            # word asc) via a negated-count sort key, then keep ranks
-            # within budget
-            ranked = global_row_id(
-                vocab.withColumn("_negcount", -F.col("count")),
-                ["_negcount", "word"],
-                "_rk",
-            )
-            vocab = (
-                ranked.filter(F.col("_rk") < max_driver_vocab)
-                .drop("_rk", "_negcount")
-                .localCheckpoint(eager=True)
-            )
-            method = "driver"
-        else:
-            method = "distributed"
-    if method == "driver":
+        # deterministic top-k without a single-partition global
+        # sort: range-partitioned 0-based rank on (count desc,
+        # word asc) via a negated-count sort key, then keep ranks
+        # within budget
+        ranked = global_row_id(
+            vocab.withColumn("_negcount", -F.col("count")),
+            ["_negcount", "word"],
+            "_rk",
+        )
+        vocab = (
+            ranked.filter(F.col("_rk") < max_driver_vocab)
+            .drop("_rk", "_negcount")
+            .localCheckpoint(eager=True)
+        )
+        on_driver = True
+    if on_driver:
         rows = vocab.select("word", "count", "symbols").collect()
         # start from the JVM-derived symbols so char splitting is
         # byte-identical to the distributed path for any input
@@ -386,7 +358,7 @@ def learn_bpe(
         a, b = top[0]["a"], top[0]["b"]
         merges.append((a, b))
         vocab = apply_bpe_merge(vocab, a, b)
-        if (i + 1) % checkpoint_every == 0:
+        if (i + 1) % _CHECKPOINT_EVERY == 0:
             vocab = vocab.localCheckpoint(eager=True)
     return merges, vocab
 
@@ -429,7 +401,6 @@ def encode_corpus(
     id_col: str = "doc_id",
     text: str = "text",
     token_ids: DataFrame | None = None,
-    method: str = "auto",
     unk_id: int = -1,
     max_dict_vocab: int = 2_000_000,
     alphabet: str = "char",
@@ -449,32 +420,27 @@ def encode_corpus(
     new shards consistently against a frozen tokenizer; symbols absent
     from a frozen inventory map to ``unk_id``, never silently drop).
 
-    ``method`` picks the corpus-side application (same auto pattern as
-    ``ivf_index(assign=...)``):
+    The distinct-word count (one cheap count on the checkpointed
+    vocabulary) picks the corpus-side application:
 
-    - ``'dict'``: the (word -> ids) map — vocabulary-sized, already
-      materialized — collects to a broadcast dict applied by one
-      Arrow-batched ``mapInPandas`` pass over the JVM-tokenized word
-      arrays (tokenization stays in Catalyst, so both methods see
-      byte-identical tokens): zero shuffles, zero joins. 3M docs x 20
-      tokens measured 156 s (join) -> 11.6 s (dict).
-    - ``'join'``: one corpus-sized equi-join on ``word`` onto the
+    - within ``max_dict_vocab``: the (word -> ids) map — vocabulary-
+      sized, already materialized — collects to a broadcast dict
+      applied by one Arrow-batched ``mapInPandas`` pass over the
+      JVM-tokenized word arrays (tokenization stays in Catalyst, so
+      both paths see byte-identical tokens): zero shuffles, zero
+      joins. 3M docs x 20 tokens measured 156 s (join) -> 11.6 s
+      (dict).
+    - over it: one corpus-sized equi-join on ``word`` onto the
       position-exploded corpus + array_sort-ordered per-doc rebuild
       (no collect-order dependence) — no driver-sized collect at all,
       for vocabularies too large to broadcast.
-    - ``'auto'``: ``'dict'`` when the distinct-word count (one cheap
-      count on the checkpointed vocabulary) is <= ``max_dict_vocab``.
 
-    Docs with no tokens return an empty array. Returns
+    Docs with no tokens (NULL text included) return an empty array.
+    Returns
     ``(id_col, token_ids array<int>, n_tokens)``.
     """
     from .textstats import tokens
 
-    if method not in ("auto", "dict", "join"):
-        raise ValueError(
-            f"encode_corpus: unknown method {method!r} "
-            "(expected 'auto', 'dict', or 'join')"
-        )
     _check_alphabet("encode_corpus", alphabet)
     tok = docs.select(
         F.col(id_col), F.posexplode(tokens(text)).alias("pos", "word")
@@ -500,9 +466,7 @@ def encode_corpus(
             ).alias("ids")
         )
     )
-    if method == "auto":
-        method = "dict" if seg.count() <= max_dict_vocab else "join"
-    if method == "dict":
+    if seg.count() <= max_dict_vocab:
         return _encode_dict(docs, per_word, id_col, text)
     enc = (
         tok.join(per_word, "word")
@@ -563,7 +527,8 @@ def _encode_dict(
         m = bmap.value
         for pdf in batches:
             ids = [
-                [i for w in ws for i in m[w]] if len(ws) else []
+                # NULL text -> NULL token array -> no tokens
+                [i for w in ws for i in m[w]] if ws is not None else []
                 for ws in pdf["__words"]
             ]
             yield pd.DataFrame(
@@ -860,7 +825,8 @@ def encode_stream(
 
         for pdf in batches:
             enc = [
-                [i for w in ws for i in word_ids(w)] if len(ws) else []
+                # NULL text -> NULL token array -> no tokens
+                [i for w in ws for i in word_ids(w)] if ws is not None else []
                 for ws in pdf["__words"]
             ]
             yield pd.DataFrame(
@@ -878,23 +844,22 @@ def segment_words(
     words: DataFrame,
     merges: list[tuple[str, str]],
     word_col: str = "word",
-    method: str = "auto",
     alphabet: str = "char",
 ) -> DataFrame:
     """Apply a learned merge list to segment words (tokenization-time
     path): chars + end-of-word, then each merge in learned order.
 
-    ``method`` picks the physical form (``'jvm'`` == ``'py'`` is
+    The merge-list length picks the physical form (the two agree word
+    for word, NULL/empty words and column order included —
     pytest-pinned):
 
-    - ``'jvm'``: the merge list folds into the plan as successive
+    - up to 48 merges: the merge list folds into the plan as successive
       whole-stage-codegen projections — one scan, no shuffles, no
-      Python. Right for short merge lists, but each merge adds a
-      projection LAYER, and a deep stack of nested aggregate() HOFs is
-      pathological for Catalyst re-analysis (measured ~30 s/action at
-      depth 12 once a Generate inlines it) — a 1024-merge tokenizer
-      would not even plan.
-    - ``'py'``: one Arrow-batched ``mapInPandas`` segmenting each word
+      Python. Each merge adds a projection LAYER, and a deep stack of
+      nested aggregate() HOFs is pathological for Catalyst re-analysis
+      (measured ~30 s/action at depth 12 once a Generate inlines it) —
+      a 1024-merge tokenizer would not even plan.
+    - beyond 48: one Arrow-batched ``mapInPandas`` segmenting each word
       by merge-RANK priority (:func:`_py_apply_ranks` — per-word cost
       independent of the merge-list length; the sequential fold is the
       exact fallback when :func:`_rank_encode_exact` cannot prove the
@@ -902,23 +867,15 @@ def segment_words(
       realistic (32k-merge) tokenizers segment in one pass. Python
       cost stays vocabulary-sized because every caller feeds distinct
       words.
-    - ``'auto'``: ``'jvm'`` for <= 48 merges, ``'py'`` beyond.
     """
-    if method not in ("auto", "jvm", "py"):
-        raise ValueError(
-            f"segment_words: unknown method {method!r} "
-            "(expected 'auto', 'jvm', or 'py')"
-        )
     _check_alphabet("segment_words", alphabet)
-    if method == "auto":
-        method = "jvm" if len(merges) <= 48 else "py"
-    if method == "py":
+    if len(merges) > 48:
         from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
         # symbols replaces any existing column IN PLACE (else appends),
-        # so 'py' and 'jvm' agree on column ORDER as well as content —
+        # so both forms agree on column ORDER as well as content —
         # positional consumers must not see a different shape when the
-        # auto threshold flips the method
+        # merge count crosses the threshold
         sym_field = StructField("symbols", ArrayType(StringType()), True)
         fields = [
             sym_field if f.name == "symbols" else f for f in words.schema.fields

@@ -408,7 +408,6 @@ def backoff_logprob(
     id_col: str = "doc_id",
     min_count: int = 2,
     alpha: float = 0.4,
-    hash_tokens: bool = True,
 ) -> DataFrame:
     """Per-document mean negative log-score under a trigram LM with
     STUPID BACKOFF (Brants et al., EMNLP 2007 — the web-scale n-gram
@@ -436,17 +435,16 @@ def backoff_logprob(
     tables — Catalyst broadcasts the small ones, AQE handles the big;
     the final per-doc mean is one hash aggregate.
 
-    ``hash_tokens=True`` (default, r15): the position stream carries
-    xxhash64(token) longs instead of token strings, so all three
-    n-gram aggregates and all five scoring joins shuffle/probe 8-byte
-    keys (guide §2.3). Counts — hence scores — are identical up to
-    xxhash64 collisions (~|vocab|^2/2^65), the same accepted class as
-    the hashed gram keys elsewhere; pass False for string-exact
-    scoring (the persisted-LM path, ``ngram_lm_build``/
-    ``backoff_score``, always keeps strings — its parquet artifact is
-    a public contract).
+    The position stream carries xxhash64(token) longs instead of token
+    strings (r15), so all three n-gram aggregates and all five scoring
+    joins shuffle/probe 8-byte keys (guide §2.3). Counts — hence
+    scores — are identical up to xxhash64 collisions
+    (~|vocab|^2/2^65), the same accepted class as the hashed gram keys
+    elsewhere. (The persisted-LM path, ``ngram_lm_build``/
+    ``backoff_score``, keeps strings — its parquet artifact is a
+    public contract.)
     """
-    pos = track(_ngram_positions(docs, text, id_col, hash_tokens=hash_tokens))
+    pos = track(_ngram_positions(docs, text, id_col, hash_tokens=True))
     tri, bi, uni = _ngram_tables(pos, min_count)
     uni = track(uni)
     return _backoff_join_score(pos, tri, bi, uni, id_col, alpha, smooth_oov=False)

@@ -186,28 +186,27 @@ def _bucket_frame(
     id_col: str,
     vec_col: str,
     planes_list: list[list[list[float]]],
-    assign: str = "auto",
 ) -> DataFrame:
     """(id, tbl, bucket) rows: every hash table's sign bucket for every
     row — the corpus-sized stage shared by :func:`lsh_index` and the
     inline path of :func:`cosine_topk_lsh`.
 
-    ``assign`` mirrors :func:`ivf_index`: ``'jvm'`` evaluates the sign
-    dots as SQL higher-order functions (dependency-free); ``'numpy'``
-    computes ALL ``n_tables * n_planes`` dots as one Arrow-batched BLAS
-    matmul and packs the sign bits per table. The interpreted evaluator
+    The per-row multiply count ``n_tables * n_planes * dim`` picks the
+    engine. Under 2048 the sign dots run as SQL higher-order functions
+    (dependency-free, no Python workers); from 2048 on ALL
+    ``n_tables * n_planes`` dots run as one Arrow-batched BLAS matmul
+    that packs the sign bits per table. The interpreted evaluator
     prices HOF dots at ~1.3M mult/s/core, so at the standard 4x8x64
     configuration (2048 mults/row) the matmul path is ~10x faster on a
-    corpus-sized scan; ``'auto'`` picks it at that size. Sign rule is
-    strictly ``dot > 0`` in both paths; a dot within one ulp of zero
-    may bucket differently between them (measure-zero for real data,
-    and only moves a vector to a neighbouring bucket of an already
-    approximate index)."""
+    corpus-sized scan. Sign rule is strictly ``dot > 0`` in both paths;
+    a dot within one ulp of zero may bucket differently between them
+    (measure-zero for real data, and only moves a vector to a
+    neighbouring bucket of an already approximate index)."""
     n_tables = len(planes_list)
     n_planes = len(planes_list[0])
     dim = len(planes_list[0][0])
     src = df.select(id_col, F.col(vec_col).alias("bv"))
-    if assign == "jvm" or (assign == "auto" and n_tables * n_planes * dim < 2048):
+    if n_tables * n_planes * dim < 2048:
         return src.select(
             id_col, F.explode(_multi_buckets("bv", planes_list)).alias("tb")
         ).select(id_col, F.col("tb.tbl").alias("tbl"), F.col("tb.bucket").alias("bucket"))
@@ -246,7 +245,6 @@ def lsh_index(
     dim: int | None = None,
     n_tables: int = 4,
     seed: int = 42,
-    assign: str = "auto",
 ) -> DataFrame:
     """One-time LSH indexing pass: the (id, tbl, bucket) table.
 
@@ -262,14 +260,15 @@ def lsh_index(
     invariant under positive scaling — see ``_sign_bucket_sql``), with
     all ``n_tables`` bucketings in one projection over one scan. The
     planes are derived from ``seed``; pass the same (seed, n_planes,
-    n_tables, dim) to the probe.
+    n_tables, dim) to the probe. The table size picks the bucketing
+    engine (see :func:`_bucket_frame`).
     """
     if dim is None:
         dim = len(corpus.select(vec).first()[0])
     planes_list = [
         random_hyperplanes(dim, n_planes, seed=seed + t) for t in range(n_tables)
     ]
-    return _bucket_frame(_fan_out(corpus), id_col, vec, planes_list, assign=assign)
+    return _bucket_frame(_fan_out(corpus), id_col, vec, planes_list)
 
 
 def cosine_topk_lsh(
@@ -286,7 +285,6 @@ def cosine_topk_lsh(
     index: DataFrame | None = None,
     seed: int = 42,
     n_probes: int = 1,
-    assign: str = "auto",
 ) -> DataFrame:
     """Approximate top-k: random-hyperplane LSH with ``n_tables``
     independent bucketings (union of candidates), exact rescoring.
@@ -337,7 +335,7 @@ def cosine_topk_lsh(
     else:
         # corpus-sized bucket pass: numpy matmul path at the standard
         # table sizes (see _bucket_frame) — the dominant one-shot cost
-        c_b = _bucket_frame(c, id_col, "cv", planes_list, assign=assign)
+        c_b = _bucket_frame(c, id_col, "cv", planes_list)
     q_buckets = (
         _multi_buckets("qv", planes_list)
         if n_probes <= 1
@@ -379,7 +377,6 @@ def ivf_index(
     n_cells: int = 16,
     seed: int = 42,
     sample_fraction: float | None = None,
-    assign: str = "auto",
     trainer: str = "mllib",
     sample_rows: int = 100_000,
 ) -> tuple[DataFrame, list[list[float]]]:
@@ -391,13 +388,13 @@ def ivf_index(
     construction); the index is just an extra int column, so it can be
     written back to parquet partitioned by cell for pruned reads.
 
-    ``assign``: ``'jvm'`` keeps assignment in SQL higher-order
-    functions (dependency-free, fine for small cell counts); ``'numpy'``
-    runs one Arrow-batched matmul + argmax per batch — the assignment
-    is n_cells x dim multiplies PER ROW, and interpreted HOFs price
-    that at ~1.3M mult/s/core, so at 256 cells x 64 dims the numpy path
-    is ~50x faster (measured 315 s -> 7 s for 3M rows). ``'auto'``
-    (default) picks numpy when n_cells * dim >= 2048.
+    The assignment costs n_cells x dim multiplies PER ROW, and that
+    count picks its engine: under 2048 it stays in SQL higher-order
+    functions (dependency-free, fine for small cell counts); from 2048
+    on it runs as one Arrow-batched matmul + argmax per batch —
+    interpreted HOFs price the dots at ~1.3M mult/s/core, so at 256
+    cells x 64 dims the matmul is ~50x faster (measured 315 s -> 7 s
+    for 3M rows).
 
     ``trainer`` picks where the centroid FIT runs (assignment is
     always distributed):
@@ -423,11 +420,6 @@ def ivf_index(
             f"ivf_index: unknown trainer {trainer!r} "
             "(expected 'mllib' or 'driver')"
         )
-    if assign not in ("auto", "jvm", "numpy"):
-        raise ValueError(
-            f"ivf_index: unknown assign {assign!r} "
-            "(expected 'auto', 'jvm', or 'numpy')"
-        )
     if trainer == "driver":
         X = _train_sample(df, vec, seed, sample_fraction, sample_rows)
         if X.size == 0:
@@ -449,7 +441,7 @@ def ivf_index(
         centroids = [np.asarray(c).tolist() for c in model.clusterCenters()]
     raw = _fan_out(df).select(id_col, F.col(vec).alias("rawv"))
     dim = len(centroids[0])
-    if assign == "numpy" or (assign == "auto" and n_cells * dim >= 2048):
+    if n_cells * dim >= 2048:
         import pandas as pd
 
         C = np.asarray(centroids, dtype=np.float64)  # (n_cells, dim)
@@ -566,7 +558,6 @@ def ivf_pq_encode(
     indexed_corpus: DataFrame,
     codebooks: list[list[list[float]]],
     vec_col: str = "v",
-    assign: str = "auto",
 ) -> DataFrame:
     """Add PQ ``codes`` to an :func:`ivf_index`-ed corpus — the combined
     IVF-PQ layout (Jegou et al., TPAMI 2011 §IV): coarse cell for
@@ -578,16 +569,16 @@ def ivf_pq_encode(
     NORMALIZED vector (``v``), matching the normalized-query LUTs
     built at probe time.
 
-    ``assign`` mirrors :func:`ivf_index`: ``'jvm'`` inlines the
-    codebooks as SQL literals (dependency-free, fine for small m*k);
-    ``'numpy'`` runs the assignment as one Arrow-batched matmul+argmin
-    per subspace — encoding costs m*k*dsub = k*dim multiplies PER ROW
-    (16k at m=16/k=256/dim=64), which the interpreted HOF evaluator
-    prices at ~80 rows/s/core, and the inlined literal matrices alone
-    are ~300 KB of SQL text to parse. ``'auto'`` picks numpy when
-    k*dim >= 4096. Both paths break argmin ties to the first minimal
-    index; near-tie codes may differ between them by last-ulp rounding
-    (immaterial for an approximate code — the exact rescore ranks).
+    Encoding costs m*k*dsub = k*dim multiplies PER ROW, and that count
+    picks the engine: under 4096 the codebooks inline as SQL literals
+    (dependency-free, fine for small m*k); from 4096 on the assignment
+    runs as one Arrow-batched matmul+argmin per subspace — at
+    m=16/k=256/dim=64 (16k multiplies) the interpreted HOF evaluator
+    manages ~80 rows/s/core, and the inlined literal matrices alone
+    are ~300 KB of SQL text to parse. Both paths break argmin ties to
+    the first minimal index; near-tie codes may differ between them by
+    last-ulp rounding (immaterial for an approximate code — the exact
+    rescore ranks).
 
     Code layout: the numpy path with ``n_codes <= 256`` emits
     ``codes`` as BINARY (one byte per subspace — m=16 really is 16
@@ -597,7 +588,7 @@ def ivf_pq_encode(
     m = len(codebooks)
     n_codes = len(codebooks[0])
     dsub = len(codebooks[0][0])
-    if assign == "jvm" or (assign == "auto" and m * n_codes * dsub < 4096):
+    if m * n_codes * dsub < 4096:
         return indexed_corpus.withColumn(
             "codes", F.expr(_pq_codes_sql(vec_col, codebooks))
         )
@@ -1706,31 +1697,29 @@ def pq_encode(
     codebooks: list[list[list[float]]],
     vec: str = "embedding",
     id_col: str = "vec_id",
-    assign: str = "auto",
 ) -> DataFrame:
     """Encode the corpus: (id, codes array<int>, v normalized). One scan;
     the code column is m bytes of information per vector (vs 4*dim for
     the raw floats) — the column you persist for a 100 TB ANN corpus.
 
-    ``assign='jvm'`` evaluates the per-subspace argmin as inlined SQL
-    higher-order functions (dependency-free, no Python workers).
-    ``'numpy'`` runs the assignment through :func:`_pq_block_assign` —
-    all m subspaces of an Arrow batch in one block-diagonal BLAS matmul
-    (measured 5x faster at 3M vectors x m=8/k=16 where the interpreted
-    HOF pays ~1k lambda evals per row; the one-time corpus encode is
-    the slowest ANN tier, so this is the at-scale default). ``'auto'``
-    picks numpy from m*k*dsub >= 512 — under that the Arrow round-trip
-    of the vector column costs more than the HOF saves. Codes are
-    layout- and value-compatible between the paths (array<int>,
-    first-minimal-index ties; near-ties can differ by last-ulp rounding
-    of the two distance forms, immaterial for an approximate code —
-    equality on real data is pinned by pytest).
+    The per-row multiply count m*k*dsub picks the engine. Under 512 the
+    per-subspace argmin runs as inlined SQL higher-order functions
+    (dependency-free, no Python workers) — there the Arrow round-trip
+    of the vector column costs more than the HOF saves. From 512 on
+    it runs through :func:`_pq_block_assign` — all m subspaces of an
+    Arrow batch in one block-diagonal BLAS matmul (measured 5x faster
+    at 3M vectors x m=8/k=16 where the interpreted HOF pays ~1k lambda
+    evals per row; the one-time corpus encode is the slowest ANN
+    tier). Codes are layout- and value-compatible between the paths
+    (array<int>, first-minimal-index ties; near-ties can differ by
+    last-ulp rounding of the two distance forms, immaterial for an
+    approximate code — each path is pinned to a reference by pytest).
     """
     m = len(codebooks)
     k = len(codebooks[0])
     dsub = len(codebooks[0][0])
     n = normalize(_fan_out(df), vec, "v").select(id_col, "v")
-    if assign == "jvm" or (assign == "auto" and m * k * dsub < 512):
+    if m * k * dsub < 512:
         return n.withColumn("codes", F.expr(_pq_codes_sql("v", codebooks)))
     import pandas as pd
 
@@ -1749,24 +1738,39 @@ def pq_encode(
     return n.mapInPandas(_enc, f"{id_col} {id_t}, v array<double>, codes array<int>")
 
 
-def _pq_topk_numpy(
+def pq_topk(
     encoded: DataFrame,
     codebooks: list[list[list[float]]],
-    qn: DataFrame,
-    k: int,
-    oversample: int,
-    id_col: str,
-    qid_col: str,
-    rescore: bool,
+    queries: DataFrame,
+    k: int = 10,
+    oversample: int = 4,
+    vec: str = "embedding",
+    id_col: str = "vec_id",
+    qid_col: str = "qid",
+    rescore: bool = True,
 ) -> DataFrame:
-    """Arrow-batched ADC scan (see ``pq_topk(scan=...)``). Queries are
-    collected driver-side — they are broadcast-sized by the operator's
-    contract — and their LUTs ride the mapInPandas closure; each batch
-    emits only its per-query top-K under (adc desc, id asc), which the
-    global window reduces to the exact same candidate set the full
-    scan would rank."""
+    """ADC (asymmetric distance) top-k: per query, build the m x k
+    lookup table of subspace dot products ONCE, score every code word
+    with m table lookups (not dim multiplies), keep the top
+    k*oversample, then exactly rescore those few with the true cosine.
+
+    Scale shape: queries are collected driver-side — they are
+    broadcast-sized by the operator's contract — and their LUTs ride
+    the mapInPandas closure; the corpus scan reads only (id, codes) —
+    the compressed column — and the exact rescore joins back just
+    k*oversample rows per query.
+
+    The ADC scan is an Arrow-batched LUT gather emitting only each
+    batch's per-query top-K — per-batch selection under the same total
+    order (adc desc, id asc) is a monotone filter, so the global
+    candidate set is IDENTICAL to a full scan's; the global window then
+    ranks ~batches*K narrow rows instead of |corpus| * n_queries (an
+    interpreted-HOF scan priced ~1.3M lookups/s/core, and its all-pairs
+    window sort dominated the rest).
+    """
     import pandas as pd
 
+    qn = normalize(_fan_out(queries), vec, "qv").select(qid_col, "qv")
     qrows = qn.collect()
     if not qrows:
         from pyspark.sql import types as T
@@ -1829,89 +1833,6 @@ def _pq_topk_numpy(
         .join(F.broadcast(qn), qid_col)
         .withColumn("cosine", _dot(F.col("v"), F.col("qv")))
     )
-    w2 = Window.partitionBy(qid_col).orderBy(F.col("cosine").desc(), F.col(id_col).asc())
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select(qid_col, id_col, "cosine", "rank")
-    )
-
-
-def pq_topk(
-    encoded: DataFrame,
-    codebooks: list[list[list[float]]],
-    queries: DataFrame,
-    k: int = 10,
-    oversample: int = 4,
-    vec: str = "embedding",
-    id_col: str = "vec_id",
-    qid_col: str = "qid",
-    rescore: bool = True,
-    scan: str = "auto",
-) -> DataFrame:
-    """ADC (asymmetric distance) top-k: per query, build the m x k
-    lookup table of subspace dot products ONCE, score every code word
-    with m table lookups (not dim multiplies), keep the top
-    k*oversample, then exactly rescore those few with the true cosine.
-
-    Scale shape: queries (with their LUTs) broadcast; the corpus scan
-    reads only (id, codes) — the compressed column — and the exact
-    rescore joins back just k*oversample rows per query.
-
-    ``scan``: ``'numpy'`` (and ``'auto'``, the default) runs the ADC
-    scan as an Arrow-batched LUT gather emitting only each batch's
-    per-query top-K — per-batch selection under the same total order
-    (adc desc, id asc) is a monotone filter, so the global candidate
-    set is IDENTICAL to the full scan's; the global window then ranks
-    ~batches*K narrow rows instead of |corpus| * n_queries (the
-    interpreted HOF prices the scan at ~1.3M lookups/s/core, and the
-    all-pairs window sort dominated the rest). ``'jvm'`` keeps the
-    dependency-free SQL path. Query LUTs differ between the two
-    engines only in last-ulp summation order.
-    """
-    m = len(codebooks)
-    dsub = len(codebooks[0][0])
-    qn = normalize(_fan_out(queries), vec, "qv").select(qid_col, "qv")
-    if scan != "jvm":
-        return _pq_topk_numpy(
-            encoded, codebooks, qn, k, oversample, id_col, qid_col, rescore
-        )
-    # LUT[j][c] = dot(q_j, codebook[j][c]) — dot LUT approximates cosine
-    # on normalized vectors
-    lut_parts = []
-    for j in range(m):
-        sub = f"slice(qv, {j * dsub + 1}, {dsub})"
-        lut_parts.append(
-            f"element_at(transform(array({sub}), sq ->"
-            f" transform({_matrix_sql(codebooks[j])}, c ->"
-            f" aggregate(zip_with(sq, c, (a, b) -> a*b), 0D, (acc, x) -> acc + x))"
-            f"), 1)"
-        )
-    q = qn.withColumn("lut", F.expr("array(" + ",".join(lut_parts) + ")"))
-
-    # the ADC scan touches ONLY the compressed column — never the floats
-    scored = encoded.select(id_col, "codes").crossJoin(
-        F.broadcast(q.select(qid_col, "qv", "lut"))
-    ).withColumn(
-        "adc",
-        F.expr(
-            "aggregate(transform(codes, (c, j) ->"
-            " element_at(element_at(lut, j + 1), c + 1)),"
-            " 0D, (acc, x) -> acc + x)"
-        ),
-    )
-    w = Window.partitionBy(qid_col).orderBy(F.col("adc").desc(), F.col(id_col).asc())
-    cand = (
-        scored.withColumn("arank", F.row_number().over(w))
-        .filter(F.col("arank") <= k * (oversample if rescore else 1))
-    )
-    if not rescore:
-        return cand.select(qid_col, id_col, F.col("adc").alias("score"), F.col("arank").alias("rank"))
-    # exact rescore: join the few candidates back to the raw vectors —
-    # candidate side broadcast, so the corpus is never reshuffled
-    exact = encoded.select(id_col, "v").join(
-        F.broadcast(cand.select(qid_col, id_col, "qv")), id_col
-    ).withColumn("cosine", _dot(F.col("v"), F.col("qv")))
     w2 = Window.partitionBy(qid_col).orderBy(F.col("cosine").desc(), F.col(id_col).asc())
     return (
         exact.withColumn("rank", F.row_number().over(w2))
@@ -2002,18 +1923,17 @@ def rotate_vectors(
     R: list[list[float]],
     vec: str = "embedding",
     out: str | None = None,
-    assign: str = "auto",
 ) -> DataFrame:
     """Apply the OPQ rotation: ``out = x @ R`` per row (orthogonal, so
-    cosines/norms are unchanged). ``assign`` mirrors the other ANN
-    stages: ``'numpy'`` (and ``'auto'`` at d^2 >= 2048) runs one
+    cosines/norms are unchanged). Like the other ANN stages, the
+    per-row multiply count d^2 picks the engine: from 2048 on one
     Arrow-batched matmul per batch — d^2 = 4096 multiplies per row at
-    d=64 prices the interpreted HOF path at ~300 rows/s/core;
-    ``'jvm'`` keeps the dependency-free transform-of-dots form."""
+    d=64 prices the interpreted HOF path at ~300 rows/s/core; under it
+    the dependency-free transform-of-dots form."""
     out = out or vec
     Rm = np.asarray(R, dtype=np.float64)
     dim = Rm.shape[0]
-    if assign == "jvm" or (assign == "auto" and dim * dim < 2048):
+    if dim * dim < 2048:
         # rotated_i = dot(x, R[:, i]): iterate rows of R^T as literals
         rt = Rm.T.tolist()
         return df.withColumn(

@@ -3294,10 +3294,10 @@ def q160(spark, sf_dir):
 def q96(spark, sf_dir):
     """BPE merge learning (arXiv:1508.07909) on the corpus via the
     production default path: one DISTRIBUTED corpus pass builds the
-    weighted word vocabulary; the merge loop then runs wherever
-    ``method='auto'`` routes it — here the driver incremental-pair
-    fold (r13), since the fixture's type count is far under the 2M
-    budget; the per-merge distributed loop remains the
+    weighted word vocabulary; the merge loop then runs where the
+    vocabulary size puts it — here the driver incremental-pair fold
+    (r13), since the fixture's type count is far under the 2M
+    ``max_driver_vocab`` budget; the per-merge distributed loop remains the
     large-vocabulary fallback and is merge-for-merge parity-pinned by
     tests/test_round13.py. Rows-only: the iterative argmax loop is not
     SQL-expressible; pytest pins merges + segmentation to a

@@ -451,7 +451,7 @@ def main() -> None:
         if only is None or "bpe_train_1024" in only:
 
             def _train_1024():
-                merges, vocab = learn_bpe(bpe_docs, n_merges=1024, method="driver")
+                merges, vocab = learn_bpe(bpe_docs, n_merges=1024)
                 assert len(merges) == 1024, len(merges)
                 return vocab
 
@@ -466,9 +466,7 @@ def main() -> None:
         if only is not None and "bpe_train_32768" in only:
 
             def _train_32k():
-                merges, vocab = learn_bpe(
-                    bpe_docs, n_merges=32_768, method="driver"
-                )
+                merges, vocab = learn_bpe(bpe_docs, n_merges=32_768)
                 assert len(merges) == 32_768, len(merges)
                 return vocab
 
@@ -486,7 +484,7 @@ def main() -> None:
         if only is not None and {"bpe_encode_deep", "bpe_encode_deep_ctl"} & only:
             from ezdata_spark.operators.bpe import encode_corpus
 
-            deep_merges, _ = learn_bpe(bpe_docs, n_merges=8192, method="driver")
+            deep_merges, _ = learn_bpe(bpe_docs, n_merges=8192)
             ctl_merges = deep_merges[:1024]
             run("bpe_encode_deep_ctl",
                 lambda: encode_corpus(bpe_docs, ctl_merges), rows_in=doc_n)
@@ -1376,7 +1374,7 @@ def main() -> None:
             "\nANN tier notes (3M 64-d vectors = 600x the sf0.1 embeddings):\n"
             "- `pq_encode` is the ONE-TIME corpus compression,\n"
             "  embarrassingly parallel and linear (verified 1M->3M). Round\n"
-            "  9: assign='auto' now takes the block-diagonal single-matmul\n"
+            "  9: at these codebook sizes it takes the block-diagonal matmul\n"
             "  numpy path (_pq_block_assign — every subspace of an Arrow\n"
             "  batch in ONE dgemm), 84 -> 9.2 s at 3M (9.2x; the earlier\n"
             "  'Arrow transfer dominates' 1.6x note measured the\n"

@@ -209,19 +209,28 @@ def test_lsh_prebuilt_index_matches_inline(spark, sf_dir):
 
 
 def test_lsh_bucket_engines_agree(spark, sf_dir):
-    """_bucket_frame's numpy matmul path must produce bit-identical
-    (id, tbl, bucket) rows to the JVM higher-order-function path — the
-    sign rule (strictly dot > 0) is the whole contract."""
+    """Both _bucket_frame engines produce exactly the (id, tbl, bucket)
+    rows of a numpy sign-bucket reference — the sign rule (bit i =
+    strictly dot(v, plane_i) > 0) is the whole contract. At 4 tables x
+    64 dims, 4 planes take the JVM higher-order-function path and 8
+    the Arrow matmul path."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").withColumn(
         "embedding", F.col("embedding").cast("array<double>")
     )
-    from ezdata_spark.operators.similarity import lsh_index
+    from ezdata_spark.operators.similarity import lsh_index, random_hyperplanes
 
-    jvm = {tuple(r) for r in
-           lsh_index(emb, dim=64, n_planes=8, n_tables=4, assign="jvm").collect()}
-    np_ = {tuple(r) for r in
-           lsh_index(emb, dim=64, n_planes=8, n_tables=4, assign="numpy").collect()}
-    assert jvm == np_ and len(jvm) > 0
+    rows = emb.select("vec_id", "embedding").collect()
+    ids = [r.vec_id for r in rows]
+    V = np.asarray([r.embedding for r in rows], dtype=np.float64)
+    for n_planes in (4, 8):
+        want = set()
+        for t in range(4):
+            P = np.asarray(random_hyperplanes(64, n_planes, seed=42 + t))
+            bits = (V @ P.T > 0) @ (1 << np.arange(n_planes))
+            want |= {(i, t, int(b)) for i, b in zip(ids, bits)}
+        got = {tuple(r) for r in
+               lsh_index(emb, dim=64, n_planes=n_planes, n_tables=4).collect()}
+        assert got == want and len(got) > 0, n_planes
 
 
 def test_lsh_multiprobe_improves_recall(spark, sf_dir):
@@ -1236,12 +1245,26 @@ def test_pq_recall_vs_exact(spark, sf_dir):
     adc = pq_topk(enc, books, qs, k=1, rescore=False).collect()
     assert all(r.qid == r.vec_id for r in adc), [(r.qid, r.vec_id) for r in adc]
 
-    # scan engines agree: the Arrow LUT-gather path's per-batch top-K
-    # under (adc desc, id asc) is a monotone filter, so the rescored
-    # result must match the full JVM scan pair-for-pair
-    jvm = {(r.qid, r.vec_id) for r in
-           pq_topk(enc, books, qs, k=10, oversample=8, scan="jvm").collect()}
-    assert jvm == approx
+    # the Arrow LUT-gather scan's per-batch top-K under (adc desc, id
+    # asc) is a monotone filter, so the rescored result must match a
+    # full-scan ADC reference pair-for-pair: score every code, keep the
+    # top k*oversample, rescore exactly, rank
+    CB = np.asarray(books)
+    corpus = enc.select("vec_id", "codes", "v").collect()
+    cids = np.asarray([r.vec_id for r in corpus])
+    codes = np.asarray([r.codes for r in corpus])
+    Vn = np.asarray([r.v for r in corpus])
+    ref = set()
+    for r in qs.collect():
+        q = np.asarray(r.embedding, dtype=np.float64)
+        q = q / np.linalg.norm(q)
+        lut = np.einsum("jd,jcd->jc", q.reshape(8, 8), CB)
+        adc = sum(lut[j, codes[:, j]] for j in range(8))
+        cand = np.lexsort((cids, -adc))[:80]
+        cos = Vn[cand] @ q
+        top = cand[np.lexsort((cids[cand], -cos))[:10]]
+        ref |= {(r.qid, int(i)) for i in cids[top]}
+    assert ref == approx
     enc.unpersist()
 
 

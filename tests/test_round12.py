@@ -331,8 +331,13 @@ def _py_segment(word, merges):
     return syms
 
 
-@pytest.mark.parametrize("method", ["dict", "join"])
-def test_encode_corpus_matches_python_reference(spark, method):
+# the vocabulary size picks the application: a broadcast dict within
+# max_dict_vocab, the corpus join over it
+@pytest.mark.parametrize(
+    "max_dict_vocab",
+    [pytest.param(2_000_000, id="dict"), pytest.param(0, id="join")],
+)
+def test_encode_corpus_matches_python_reference(spark, max_dict_vocab):
     from ezdata_spark.operators.bpe import encode_corpus, learn_bpe
 
     corpus = [
@@ -340,26 +345,29 @@ def test_encode_corpus_matches_python_reference(spark, method):
         (1, "widest widest newest low"),
         (2, "   "),  # whitespace-only: zero tokens
         (3, "unseen lowest"),
+        (4, None),  # NULL text: zero tokens
     ]
     train = spark.createDataFrame(corpus[:2], "doc_id long, text string")
     docs = spark.createDataFrame(corpus, "doc_id long, text string")
     merges, _ = learn_bpe(train, n_merges=10)
 
     got = {r.doc_id: (list(r.token_ids), r.n_tokens)
-           for r in encode_corpus(docs, merges, method=method).collect()}
+           for r in encode_corpus(
+               docs, merges, max_dict_vocab=max_dict_vocab).collect()}
 
     # python reference: segment every distinct word, ids by sorted
     # symbol inventory over the ENCODED corpus's segmented vocabulary
-    words = sorted({w for _, t in corpus for w in t.lower().split() if w})
+    words = sorted({w for _, t in corpus for w in (t or "").lower().split()})
     seg = {w: _py_segment(w, merges) for w in words}
     inv = sorted({s for syms in seg.values() for s in syms})
     sid = {s: i for i, s in enumerate(inv)}
     want = {}
     for did, t in corpus:
-        ids = [sid[s] for w in t.lower().split() if w for s in seg[w]]
+        ids = [sid[s] for w in (t or "").lower().split() for s in seg[w]]
         want[did] = (ids, len(ids))
     assert got == want
     assert got[2] == ([], 0)  # empty doc survives with an empty array
+    assert got[4] == ([], 0)  # so does a NULL one
 
 
 def test_encode_corpus_unseen_symbol_maps_to_unk(spark):
@@ -493,7 +501,7 @@ def test_encode_stream_batch_mode_equals_encode_corpus(spark):
     merges, vocab = learn_bpe(train, n_merges=8)
     frozen = bpe_vocab_ids(vocab)
     shard = spark.createDataFrame(
-        [(1, "lowest newest unseen"), (2, "   "), (3, "low widest")],
+        [(1, "lowest newest unseen"), (2, "   "), (3, "low widest"), (4, None)],
         "doc_id long, text string",
     )
     want = {r.doc_id: (list(r.token_ids), r.n_tokens) for r in encode_corpus(
@@ -502,6 +510,7 @@ def test_encode_stream_batch_mode_equals_encode_corpus(spark):
         shard, merges, frozen, unk_id=-5).collect()}
     assert got == want
     assert got[2] == ([], 0)
+    assert got[4] == ([], 0)  # NULL text encodes as no tokens
 
 
 def test_encode_stream_true_streaming_equals_batch(spark, tmp_path):

@@ -23,17 +23,56 @@ def _toy_corpus(spark, seed=13, n_words=400, n_docs=150):
     return spark.createDataFrame(docs, "doc_id long, text string")
 
 
+def _past_48(merges):
+    """``merges`` padded to 49 with monotone merges of symbols no test
+    word contains (Latin Extended-A code points): the padding changes
+    no segmentation, only the list length, which moves segment_words
+    from its JVM form (<= 48 merges) to its mapInPandas form."""
+    pad = 49 - len(merges)
+    return merges + [(chr(0x100 + i), chr(0x100 + i)) for i in range(pad)]
+
+
+def _recount_bpe(words, n_merges):
+    """Naive BPE reference: RECOUNT every pair from scratch each round,
+    max count wins, ties to the lexicographically smallest pair."""
+    from ezdata_spark.operators.bpe import _merge_pair
+
+    words = [(list(s), c) for s, c in words]
+    merges = []
+    for _ in range(n_merges):
+        counts = {}
+        for syms, cnt in words:
+            for p in zip(syms, syms[1:]):
+                counts[p] = counts.get(p, 0) + cnt
+        if not counts:
+            break
+        best = min(counts.items(), key=lambda kv: (-kv[1], kv[0]))[0]
+        merges.append(best)
+        words = [(_merge_pair(s, *best), c) for s, c in words]
+    return merges
+
+
+def _corpus_vocab(df):
+    """(chars + end-of-word, count) per distinct whitespace token."""
+    from collections import Counter
+
+    counts = Counter(w for (t,) in df.select("text").collect() for w in t.lower().split())
+    return [([*w, "</w>"], c) for w, c in counts.items()]
+
+
 def test_learn_bpe_driver_matches_distributed(spark):
     """Directive #3 done-criterion: merge-list parity (==) between the
-    driver incremental fold and the sequential distributed loop, plus
-    final-vocabulary parity. The toy corpus is tie-rich (8-char
-    alphabet), so the lexicographic tie-break is genuinely exercised."""
+    driver incremental fold and the sequential distributed loop (forced
+    by a zero driver budget), both equal to the pure-Python recount
+    reference, plus final-vocabulary parity. The toy corpus is
+    tie-rich (8-char alphabet), so the lexicographic tie-break is
+    genuinely exercised."""
     from ezdata_spark.operators.bpe import learn_bpe
 
     df = _toy_corpus(spark, seed=31, n_words=60, n_docs=40)
-    m_dist, v_dist = learn_bpe(df, n_merges=14, method="distributed")
-    m_drv, v_drv = learn_bpe(df, n_merges=14, method="driver")
-    assert m_drv == m_dist
+    m_dist, v_dist = learn_bpe(df, n_merges=14, max_driver_vocab=0)
+    m_drv, v_drv = learn_bpe(df, n_merges=14)
+    assert m_drv == m_dist == _recount_bpe(_corpus_vocab(df), 14)
     assert len(m_dist) == 14
     d1 = {r.word: (list(r.symbols), r["count"]) for r in v_dist.collect()}
     d2 = {r.word: (list(r.symbols), r["count"]) for r in v_drv.collect()}
@@ -41,16 +80,16 @@ def test_learn_bpe_driver_matches_distributed(spark):
 
 
 def test_learn_bpe_auto_picks_driver_within_budget(spark):
-    """auto == driver when the distinct-word count fits
-    max_driver_vocab, and falls back to the distributed loop when it
-    does not (forced with max_driver_vocab=1)."""
+    """The driver fold runs when the distinct-word count fits
+    max_driver_vocab, and the distributed loop when it does not
+    (forced with max_driver_vocab=1); both equal the pure-Python
+    recount reference."""
     from ezdata_spark.operators.bpe import learn_bpe
 
     df = _toy_corpus(spark, seed=7, n_words=50, n_docs=30)
-    m_auto, _ = learn_bpe(df, n_merges=6)  # default auto
-    m_drv, _ = learn_bpe(df, n_merges=6, method="driver")
+    m_drv, _ = learn_bpe(df, n_merges=6)
     m_forced, _ = learn_bpe(df, n_merges=6, max_driver_vocab=1)
-    assert m_auto == m_drv == m_forced
+    assert m_drv == m_forced == _recount_bpe(_corpus_vocab(df), 6)
 
 
 def test_learn_bpe_driver_deep_merges_encode_matches_python(spark):
@@ -67,8 +106,8 @@ def test_learn_bpe_driver_deep_merges_encode_matches_python(spark):
     from ezdata_spark.operators.textstats import tokens
 
     df = _toy_corpus(spark, seed=13)
-    merges, _ = learn_bpe(df, n_merges=1024, method="driver")
-    assert len(merges) > 48  # deep enough to force segment_words 'py'
+    merges, _ = learn_bpe(df, n_merges=1024)
+    assert len(merges) > 48  # deep enough for segment_words' mapInPandas form
     got = {r.doc_id: list(r.token_ids) for r in encode_corpus(df, merges).collect()}
 
     tokrows = {
@@ -92,37 +131,39 @@ def test_learn_bpe_driver_deep_merges_encode_matches_python(spark):
 
 def test_segment_words_py_equals_jvm(spark):
     """The constant-depth mapInPandas segmentation == the stacked-
-    projection JVM fold, word for word, on randomized input."""
+    projection JVM fold, word for word, on randomized input. The 12
+    learned merges take the JVM form; padding the list past 48 with
+    merges of absent symbols takes the mapInPandas form on identical
+    semantics."""
     from ezdata_spark.operators.bpe import learn_bpe, segment_words
 
     df = _toy_corpus(spark, seed=5, n_words=80, n_docs=40)
-    merges, _ = learn_bpe(df, n_merges=12, method="driver")
+    merges, _ = learn_bpe(df, n_merges=12)
+    padded = _past_48(merges)
     rng = random.Random(99)
     rows = [
         ("".join(rng.choices("abcdefghij", k=rng.randint(1, 12))),)
         for _ in range(200)
     ]
-    # JVM-exact edge semantics must survive the py path too: NULL word
+    # JVM-exact edge semantics must survive the mapInPandas form too: NULL word
     # -> NULL symbols, empty word -> ['', '</w>'] (Spark split('','')
     # yields [''], unlike Python's [*''])
     rows += [("",), (None,)]
     new = spark.createDataFrame(rows, "word string").distinct()
     jvm = {
         r.word: (list(r.symbols) if r.symbols is not None else None)
-        for r in segment_words(new, merges, method="jvm").collect()
+        for r in segment_words(new, merges).collect()
     }
     py = {
         r.word: (list(r.symbols) if r.symbols is not None else None)
-        for r in segment_words(new, merges, method="py").collect()
+        for r in segment_words(new, padded).collect()
     }
     assert jvm == py
     assert jvm[""] is not None and jvm[None] is None
     # column ORDER parity for frames that already carry symbols
-    wide = segment_words(new, merges[:2], method="jvm").withColumn(
-        "extra", F.lit(1)
-    )
-    a = segment_words(wide, merges, method="jvm").columns
-    b = segment_words(wide, merges, method="py").columns
+    wide = segment_words(new, merges[:2]).withColumn("extra", F.lit(1))
+    a = segment_words(wide, merges).columns
+    b = segment_words(wide, padded).columns
     assert a == b
 
 
@@ -207,7 +248,7 @@ def test_learn_bpe_overflow_prune(spark):
         docs.append((i, " ".join(ws)))
     df = spark.createDataFrame(docs, "doc_id long, text string")
 
-    m_full, _ = learn_bpe(df, n_merges=60, method="driver")
+    m_full, _ = learn_bpe(df, n_merges=60)
     m_pruned, _ = learn_bpe(df, n_merges=60, max_driver_vocab=150, overflow="prune")
     m_pruned2, _ = learn_bpe(df, n_merges=60, max_driver_vocab=150, overflow="prune")
     assert m_pruned == m_pruned2  # deterministic top-k + fold
@@ -217,7 +258,7 @@ def test_learn_bpe_overflow_prune(spark):
     # default overflow stays the exact distributed loop (no silent
     # behavior change): auto with a tiny budget must NOT prune
     m_dist, _ = learn_bpe(df, n_merges=4, max_driver_vocab=150)
-    m_seq, _ = learn_bpe(df, n_merges=4, method="distributed")
+    m_seq, _ = learn_bpe(df, n_merges=4, max_driver_vocab=0)
     assert m_dist == m_seq
 
 
@@ -262,21 +303,24 @@ def test_ivf_trainer_driver_full_probe_equality(spark):
 def test_segment_words_parity_non_bmp(spark):
     """Unicode durability: Spark's split(w, '') splits CODE POINTS
     (surrogate pairs stay whole — verified, not assumed), matching
-    Python's [*w], so jvm == py holds for emoji / CJK / combining
-    marks, not just ascii."""
+    Python's [*w], so jvm == py (6 learned merges vs those padded to 49)
+    holds for emoji / CJK / combining marks, not just ascii."""
     from ezdata_spark.operators.bpe import learn_bpe, segment_words
 
     train = spark.createDataFrame(
         [(0, "a\U0001F600b a\U0001F600b ab"), (1, "日本語 ab ab")],
         "doc_id long, text string",
     )
-    merges, _ = learn_bpe(train, n_merges=6, method="driver")
+    merges, _ = learn_bpe(train, n_merges=6)
     words = spark.createDataFrame(
         [("a\U0001F600b",), ("日本語",), ("étude",), ("ab",)],
         "word string",
     )
-    jvm = {r.word: list(r.symbols) for r in segment_words(words, merges, method="jvm").collect()}
-    py = {r.word: list(r.symbols) for r in segment_words(words, merges, method="py").collect()}
+    jvm = {r.word: list(r.symbols) for r in segment_words(words, merges).collect()}
+    py = {
+        r.word: list(r.symbols)
+        for r in segment_words(words, _past_48(merges)).collect()
+    }
     assert jvm == py
     # the emoji survives as an intact code point in the segmentation
     # (never split into surrogate halves) on BOTH paths
@@ -291,22 +335,7 @@ def test_train_bpe_driver_fuzz_vs_recount_reference():
     loop's semantics) — 60 randomized vocabularies, including
     repeated-symbol words that exercise the greedy non-re-entrant
     fold and tie-heavy tiny alphabets."""
-    from ezdata_spark.operators.bpe import _merge_pair, _train_bpe_driver
-
-    def reference(words, n_merges):
-        words = [(list(s), c) for s, c in words]
-        merges = []
-        for _ in range(n_merges):
-            counts = {}
-            for syms, cnt in words:
-                for p in zip(syms, syms[1:]):
-                    counts[p] = counts.get(p, 0) + cnt
-            if not counts:
-                break
-            best = min(counts.items(), key=lambda kv: (-kv[1], kv[0]))[0]
-            merges.append(best)
-            words = [(_merge_pair(s, *best), c) for s, c in words]
-        return merges
+    from ezdata_spark.operators.bpe import _train_bpe_driver
 
     rng = random.Random(1337)
     for case in range(60):
@@ -316,6 +345,6 @@ def test_train_bpe_driver_fuzz_vs_recount_reference():
             w = "".join(rng.choices(alpha, k=rng.randint(1, 9)))
             vocab.append(([*w, "</w>"], rng.randint(1, 5)))
         n_merges = rng.randint(1, 30)
-        want = reference([(list(s), c) for s, c in vocab], n_merges)
+        want = _recount_bpe(vocab, n_merges)
         got = _train_bpe_driver([(list(s), c) for s, c in vocab], n_merges)
         assert got == want, (case, got, want)

@@ -42,7 +42,7 @@ def test_rank_encode_parity_fuzz_1024_merges(spark):
     )
 
     df = _toy_corpus(spark, seed=13)
-    merges, _ = learn_bpe(df, n_merges=1024, method="driver")
+    merges, _ = learn_bpe(df, n_merges=1024)
     assert len(merges) >= 1000  # corpus exhausts at 1002 on this fixture
     assert _rank_encode_exact(merges)
     ranks = _merge_ranks(merges)
@@ -95,7 +95,7 @@ def test_segment_words_py_falls_back_sequential_on_nonmonotone(spark):
     from ezdata_spark.operators.bpe import _py_apply_merges, segment_words
 
     bad = [("xy", "z"), ("x", "y")] + [("q", str(i)) for i in range(60)]
-    assert len(bad) > 48  # force method='auto' -> 'py'
+    assert len(bad) > 48  # segment_words' mapInPandas form
     rows = [("xyz",), ("xyzxyz",), ("zyx",)]
     df = spark.createDataFrame(rows, "word string")
     got = {
@@ -122,7 +122,7 @@ def test_encode_stream_deep_merges_matches_reference(spark):
     shard = docs.filter(F.col("doc_id") >= 100).withColumn(
         "text", F.concat("text", F.lit(" zznovel"))
     )
-    merges, vocab = learn_bpe(hist, n_merges=300, method="driver")
+    merges, vocab = learn_bpe(hist, n_merges=300)
     frozen = bpe_vocab_ids(vocab)
     got = {
         r.doc_id: list(r.token_ids)
@@ -188,7 +188,7 @@ def test_byte_bpe_matches_python_reference(spark):
     df = spark.createDataFrame(
         list(enumerate(texts)), "doc_id long, text string"
     )
-    merges, _ = learn_bpe(df, n_merges=24, method="driver", alphabet="byte")
+    merges, _ = learn_bpe(df, n_merges=24, alphabet="byte")
     ref_merges, ref_segs = _py_byte_bpe_train(texts, 24)
     assert merges == ref_merges
 
@@ -228,7 +228,7 @@ def test_byte_bpe_total_encode_no_unk_and_roundtrip(spark):
         [(100, "中文 désolé emoji\U0001F600 plain"), (101, "")],
         "doc_id long, text string",
     )
-    merges, vocab = learn_bpe(hist, n_merges=12, method="driver", alphabet="byte")
+    merges, vocab = learn_bpe(hist, n_merges=12, alphabet="byte")
     frozen = bpe_vocab_ids(vocab, alphabet="byte")
     out = {
         r.doc_id: (list(r.token_ids), r.n_tokens)
@@ -258,9 +258,11 @@ def test_byte_bpe_total_encode_no_unk_and_roundtrip(spark):
 
 
 def test_byte_bpe_segment_jvm_py_parity_and_artifact(spark, tmp_path):
-    """Byte-mode segment_words 'jvm' == 'py' (NULL/empty edges
-    included), and the tokenizer artifact records alphabet='byte' so a
-    reload encodes identically to the in-session tokenizer."""
+    """Byte-mode segment_words: the JVM form (10 learned merges) ==
+    the mapInPandas form (the same merges padded past 48 with merges
+    of non-hex symbols that never occur), NULL/empty edges included;
+    and the tokenizer artifact records alphabet='byte' so a reload
+    encodes identically to the in-session tokenizer."""
     from ezdata_spark.operators.ann_index import (
         load_bpe_tokenizer,
         save_bpe_tokenizer,
@@ -273,17 +275,21 @@ def test_byte_bpe_segment_jvm_py_parity_and_artifact(spark, tmp_path):
     )
 
     docs = _toy_corpus(spark, seed=41, n_words=60, n_docs=40)
-    merges, vocab = learn_bpe(docs, n_merges=10, method="driver", alphabet="byte")
+    merges, vocab = learn_bpe(docs, n_merges=10, alphabet="byte")
+    # 2-char components keep the padded list rank-exact in byte mode
+    padded = merges + [
+        (f"G{chr(0x100 + i)}", f"H{chr(0x100 + i)}") for i in range(49 - len(merges))
+    ]
     words = spark.createDataFrame(
         [("héé",), ("中中b",), ("",), (None,), ("abc",)], "word string"
     )
     jvm = {
         r.word: (list(r.symbols) if r.symbols is not None else None)
-        for r in segment_words(words, merges, method="jvm", alphabet="byte").collect()
+        for r in segment_words(words, merges, alphabet="byte").collect()
     }
     py = {
         r.word: (list(r.symbols) if r.symbols is not None else None)
-        for r in segment_words(words, merges, method="py", alphabet="byte").collect()
+        for r in segment_words(words, padded, alphabet="byte").collect()
     }
     assert jvm == py
     assert jvm[None] is None and jvm[""] == ["</w>"]
@@ -373,31 +379,8 @@ def test_learn_bpe_rejects_unknown_literals(spark):
     from ezdata_spark.operators.bpe import learn_bpe
 
     df = _toy_corpus(spark, seed=3, n_words=10, n_docs=5)
-    with pytest.raises(ValueError, match="unknown method 'drivr'"):
-        learn_bpe(df, n_merges=2, method="drivr")
     with pytest.raises(ValueError, match="unknown overflow"):
         learn_bpe(df, n_merges=2, overflow="prun")
-
-
-def test_learn_bpe_explicit_driver_respects_budget(spark):
-    """ADVICE r13 (low): an explicit method='driver' on a vocabulary
-    over max_driver_vocab raises a descriptive error instead of
-    attempting the collect."""
-    from ezdata_spark.operators.bpe import learn_bpe
-
-    df = _toy_corpus(spark, seed=3, n_words=30, n_docs=20)
-    with pytest.raises(ValueError, match="max_driver_vocab"):
-        learn_bpe(df, n_merges=2, method="driver", max_driver_vocab=1)
-
-
-def test_encode_and_segment_reject_unknown_method(spark):
-    from ezdata_spark.operators.bpe import encode_corpus, segment_words
-
-    df = _toy_corpus(spark, seed=3, n_words=10, n_docs=5)
-    with pytest.raises(ValueError, match="unknown method"):
-        encode_corpus(df, [("a", "b")], method="dct")
-    with pytest.raises(ValueError, match="unknown method"):
-        segment_words(df.select(F.lit("ab").alias("word")), [], method="jmv")
 
 
 def test_auto_shard_gate(spark):
@@ -473,8 +456,6 @@ def test_ivf_index_rejects_unknown_trainer_and_assign(spark):
     )
     with pytest.raises(ValueError, match="unknown trainer"):
         ivf_index(df, n_cells=2, trainer="mlib")
-    with pytest.raises(ValueError, match="unknown assign"):
-        ivf_index(df, n_cells=2, assign="np")
 
 
 def test_global_cumsum_fused_matches_chained(spark):

@@ -2,6 +2,7 @@
 kernel) and the decimal-scale-preserving prefix-sum total literal."""
 
 import math
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -204,3 +205,66 @@ def test_query_defs_have_unique_names():
         n.name for n in tree.body if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
     )
     assert sorted(k for k, c in names.items() if c > 1) == []
+
+
+def _engine_boundary_cases():
+    """name -> (build(emb, size), size below the rule, size at/above it).
+    Each size rule (see the operator docstrings) keeps the plan in JVM
+    expressions below its boundary and switches to a mapInPandas kernel
+    at or above it: m*k*dsub >= 512 (pq_encode), >= 4096
+    (ivf_pq_encode), tables*planes*dim >= 2048 (lsh_index), d^2 >= 2048
+    (rotate_vectors), cells*dim >= 2048 (ivf_index) and > 48 merges
+    (segment_words)."""
+    import numpy as np
+
+    from ezdata_spark.operators import similarity as S
+    from ezdata_spark.operators.bpe import segment_words
+
+    def books(k):  # m=8 subspaces of the 64-d vectors
+        return np.random.RandomState(k).randn(8, k, 8).tolist()
+
+    def rotate(emb, dim):
+        sliced = emb.select("vec_id", F.slice("embedding", 1, dim).alias("embedding"))
+        return S.rotate_vectors(sliced, np.eye(dim).tolist())
+
+    def segment(emb, n):
+        words = emb.select(F.col("vec_id").cast("string").alias("word"))
+        return segment_words(words, [(chr(0x100 + i),) * 2 for i in range(n)])
+
+    return {
+        "pq_encode": (lambda emb, k: S.pq_encode(emb, books(k)), 4, 8),
+        "ivf_pq_encode": (
+            lambda emb, k: S.ivf_pq_encode(
+                emb.select("vec_id", F.col("embedding").alias("v")), books(k)
+            ),
+            32,
+            64,
+        ),
+        "lsh_index": (
+            lambda emb, n: S.lsh_index(emb, dim=64, n_planes=n, n_tables=4), 4, 8
+        ),
+        "rotate_vectors": (rotate, 45, 46),
+        "ivf_index": (
+            lambda emb, n: S.ivf_index(emb, n_cells=n, trainer="driver")[0], 16, 32
+        ),
+        "segment_words": (segment, 48, 49),
+    }
+
+
+@pytest.mark.parametrize("name", list(_engine_boundary_cases()))
+def test_engine_size_rules_switch_at_documented_boundary(spark, sf_dir, name):
+    """The input size alone picks each operator's engine: the Python
+    kernel (MapInPandas) is in the physical plan exactly on the
+    documented side of the boundary, at dim 64 on the sf0.01
+    embeddings."""
+    build, below, above = _engine_boundary_cases()[name]
+    path = os.path.join(os.path.dirname(sf_dir), "sf0.01", "embeddings.parquet")
+    emb = spark.read.parquet(path).withColumn(
+        "embedding", F.col("embedding").cast("array<double>")
+    )
+
+    def plan(size):
+        return build(emb, size)._jdf.queryExecution().executedPlan().toString()
+
+    assert "MapInPandas" not in plan(below)
+    assert "MapInPandas" in plan(above)

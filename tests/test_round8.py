@@ -713,7 +713,7 @@ def test_knn_join_pq_string_ids_and_zero_norm(spark):
     left = spark.createDataFrame(left_rows, "doc_id string, embedding array<double>")
     indexed, cents = ivf_index(emb, n_cells=2)
     cb = pq_train(emb, m=4, k=16)
-    enc = ivf_pq_encode(indexed, cb, assign="numpy")
+    enc = ivf_pq_encode(indexed, cb)
     got = knn_join(
         left, enc, cents, k=3, nprobe=2, left_id="doc_id", right_id="vec_id",
         pq_codebooks=cb, pq_oversample=4,
@@ -777,27 +777,25 @@ def test_opq_rotation_orthogonal_and_better_mse(spark):
 
 
 def test_rotate_vectors_paths_agree_and_preserve_cosine(spark):
-    from pyspark.sql import functions as F
-
+    """Both engines return ``V @ R``: dim 45 (d^2 < 2048) takes the
+    transform-of-dots SQL form, dim 64 the Arrow matmul."""
     from ezdata_spark.operators.similarity import rotate_vectors
 
     rng = np.random.RandomState(4)
-    q, _ = np.linalg.qr(rng.randn(16, 16))
-    R = q.tolist()
-    df = spark.createDataFrame(
-        [(i, rng.randn(16).tolist()) for i in range(20)],
-        "vec_id long, embedding array<double>",
-    )
-    a = {r.vec_id: r.rv for r in
-         rotate_vectors(df, R, out="rv", assign="numpy").collect()}
-    b = {r.vec_id: r.rv for r in
-         rotate_vectors(df, R, out="rv", assign="jvm").collect()}
-    for i in a:
-        np.testing.assert_allclose(a[i], b[i], rtol=1e-12)
-    # orthogonal rotation preserves norms
-    raw = {r.vec_id: r.embedding for r in df.collect()}
-    for i in a:
-        assert np.linalg.norm(a[i]) == pytest.approx(np.linalg.norm(raw[i]))
+    for dim in (45, 64):
+        q, _ = np.linalg.qr(rng.randn(dim, dim))
+        V = rng.randn(20, dim)
+        df = spark.createDataFrame(
+            [(i, V[i].tolist()) for i in range(20)],
+            "vec_id long, embedding array<double>",
+        )
+        got = {r.vec_id: r.rv for r in
+               rotate_vectors(df, q.tolist(), out="rv").collect()}
+        want = V @ q
+        for i in got:
+            np.testing.assert_allclose(got[i], want[i], rtol=1e-12)
+            # orthogonal rotation preserves norms
+            assert np.linalg.norm(got[i]) == pytest.approx(np.linalg.norm(V[i]))
 
 
 def test_opq_end_to_end_recall_not_worse(spark):
@@ -872,7 +870,7 @@ def test_opq_composes_with_pq_knn_join(spark):
     rdf = rotate_vectors(df, R)
     rleft = rotate_vectors(left, R)
     idx, cents = ivf_index(rdf, n_cells=4)
-    enc = ivf_pq_encode(idx, cbs, assign="numpy")
+    enc = ivf_pq_encode(idx, cbs)
     got = {(r.doc_id, r.vec_id) for r in
            knn_join(rleft, enc, cents, k=5, nprobe=4,
                     pq_codebooks=cbs, pq_oversample=20).collect()}

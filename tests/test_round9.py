@@ -75,7 +75,7 @@ def test_knn_join_pq_cogroup_string_ids_and_zero_norm(spark):
     )
     indexed, cents = ivf_index(emb, n_cells=2)
     cb = pq_train(emb, m=4, k=16)
-    enc = ivf_pq_encode(indexed, cb, assign="numpy")
+    enc = ivf_pq_encode(indexed, cb)
     kw = dict(k=3, nprobe=2, left_id="doc_id", right_id="vec_id",
               pq_codebooks=cb, pq_oversample=4)
     got = knn_join(left, enc, cents, rescore="cogroup", **kw).collect()
@@ -95,42 +95,58 @@ def test_knn_join_rescore_validation(pq9_fixture):
 
 
 # ------------------------------------------------- vectorized PQ encode
+def _pq_codes_ref(rows, codebooks):
+    """vec_id -> codes reference: per subspace of each row's normalized
+    ``v``, the index of the L2-nearest centroid (first on ties)."""
+    CB = np.asarray(codebooks)
+    m, _, dsub = CB.shape
+    V = np.asarray([r.v for r in rows]).reshape(len(rows), m, 1, dsub)
+    codes = ((V - CB[None]) ** 2).sum(axis=3).argmin(axis=2)
+    return {r.vec_id: tuple(c) for r, c in zip(rows, codes.tolist())}
+
+
 def test_pq_encode_numpy_matches_jvm(spark, sf_dir):
-    """The block-diagonal single-matmul assignment must emit the same
-    codes as the inlined SQL argmin on real data (near-tie ulp flips
-    are the documented theoretical exception; none occur here)."""
+    """Both assignment engines emit the codes of a numpy nearest-
+    centroid reference on real data (near-tie ulp flips are the
+    documented theoretical exception; none occur here). At m=8 x 64
+    dims, k=4 takes the inlined SQL argmin and k=8 the block-diagonal
+    single-matmul kernel."""
     from ezdata_spark.operators.similarity import pq_encode, pq_train
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    cb = pq_train(emb, m=8, k=16)
-    j = {r.vec_id: list(r.codes) for r in pq_encode(emb, cb, assign="jvm").collect()}
-    n = {r.vec_id: list(r.codes) for r in pq_encode(emb, cb, assign="numpy").collect()}
-    assert j == n and len(j) > 0
+    v = {}
+    for k in (4, 8):
+        cb = pq_train(emb, m=8, k=k)
+        rows = pq_encode(emb, cb).collect()
+        got = {r.vec_id: tuple(r.codes) for r in rows}
+        assert got == _pq_codes_ref(rows, cb), k
+        assert len(got) > 0
+        v[k] = {r.vec_id: list(r.v) for r in rows}
     # normalized vector column must be identical too (both paths share
     # the JVM normalize projection)
-    vj = {r.vec_id: list(r.v) for r in pq_encode(emb, cb, assign="jvm").collect()}
-    vn = {r.vec_id: list(r.v) for r in pq_encode(emb, cb, assign="numpy").collect()}
-    assert vj == vn
+    assert v[4] == v[8]
 
 
 def test_ivf_pq_encode_reencode_replaces_codes(spark, sf_dir):
     """ADVICE r8: re-encoding a frame that already has a 'codes' column
     (codebook retrain) must REPLACE it — one codes field, same values
-    as encoding the code-less frame — on both assignment paths."""
+    as encoding the code-less frame, both equal to the numpy
+    nearest-centroid reference — on both assignment paths (at m=8 x 64
+    dims, k=32 inlines the codebooks as SQL, k=64 runs the matmul)."""
     from ezdata_spark.operators.similarity import ivf_index, ivf_pq_encode, pq_train
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     indexed, cents = ivf_index(emb, n_cells=4)
-    cb = pq_train(emb, m=8, k=16)
-    for assign in ("jvm", "numpy"):
-        enc = ivf_pq_encode(indexed, cb, assign=assign)
-        re_enc = ivf_pq_encode(enc, cb, assign=assign)
+    for k in (32, 64):
+        cb = pq_train(emb, m=8, k=k)
+        enc = ivf_pq_encode(indexed, cb)
+        re_enc = ivf_pq_encode(enc, cb)
         assert [f.name for f in re_enc.schema.fields].count("codes") == 1
-        a = {r.vec_id: bytes(r.codes) if isinstance(r.codes, (bytes, bytearray))
-             else tuple(r.codes) for r in enc.collect()}
-        b = {r.vec_id: bytes(r.codes) if isinstance(r.codes, (bytes, bytearray))
-             else tuple(r.codes) for r in re_enc.collect()}
-        assert a == b
+        rows = enc.collect()
+        # tuple() reads both code layouts: binary bytes and array<int>
+        a = {r.vec_id: tuple(r.codes) for r in rows}
+        b = {r.vec_id: tuple(r.codes) for r in re_enc.collect()}
+        assert a == b == _pq_codes_ref(rows, cb), k
 
 
 # -------------------------------------- persisted MinHash band index
