@@ -41,19 +41,6 @@ def track(
     return df
 
 
-def untrack(df: DataFrame) -> None:
-    """Unpersist ``df`` now and drop it from the registry (for operators
-    that finish with an intermediate before returning — keeps the
-    eager-release path and the registry consistent)."""
-    try:
-        df.unpersist()
-    finally:
-        try:
-            _TRACKED.remove(df)
-        except ValueError:
-            pass
-
-
 def release_caches() -> int:
     """Unpersist every tracked frame; returns how many were released."""
     n = 0

@@ -17,9 +17,11 @@ is bijective for IEEE doubles), so a reloaded index probes
 bit-identically to the in-session one — pinned by
 tests/test_round9.py's LSH / IVF / PQ / OPQ round-trip tests.
 
-Local-filesystem sidecar I/O; on an object store, swap the two
-`open()` calls for the Hadoop FileSystem API (the parquet part already
-goes through Spark's writer, which handles any FS).
+Local-filesystem sidecar I/O, written atomically (the JSON is encoded
+first, then renamed into place, so a failed save never leaves a torn
+sidecar); on an object store, swap ``write_atomic`` and the ``open()``
+reads for the Hadoop FileSystem API (the parquet part already goes
+through Spark's writer, which handles any FS).
 """
 
 from __future__ import annotations
@@ -28,6 +30,8 @@ import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..sources.binary_tables import write_atomic
 
 _SIDECAR = "_ann_meta.json"
 
@@ -93,8 +97,7 @@ def save_ann_index(
             )
         os.makedirs(path, exist_ok=True)
     if meta is not None:
-        with open(os.path.join(path, _SIDECAR), "w") as fh:
-            json.dump(meta, fh)
+        write_atomic(os.path.join(path, _SIDECAR), json.dumps(meta))
 
 
 def load_ann_index(
@@ -199,8 +202,7 @@ def save_ivf_pq_index_bucketed(
     meta = {"kind": "ivf_pq", "centroids": centroids, "codebooks": codebooks}
     if rotation is not None:
         meta["rotation"] = rotation
-    with open(os.path.join(loc, _SIDECAR), "w") as fh:
-        json.dump(meta, fh)
+    write_atomic(os.path.join(loc, _SIDECAR), json.dumps(meta))
 
 
 def load_ivf_pq_index_bucketed(

@@ -14,10 +14,11 @@ driver round-trip + one greedy-fold projection PER MERGE, lineage cut
 by localCheckpoint — is the exact fallback for too-big-to-collect
 vocabularies at small merge counts, and ``overflow='prune'``
 (frequency-threshold top-k, the sentencepiece/subword-nmt contract)
-covers big-vocab AND deep-merge. Encoding (:func:`encode_corpus` /
-:func:`encode_stream`) is vocabulary-sized per distinct word with a
-broadcast-dict or corpus-join application (picked by vocabulary size)
-and a frozen-inventory unk contract.
+covers big-vocab AND deep-merge. Encoding has one kernel
+(:func:`encode_stream`; :func:`encode_corpus` derives the default id
+inventory from the corpus and runs it): one Arrow-batched pass that
+segments each distinct word once per executor under a word cache,
+with a frozen-inventory unk contract.
 """
 
 from __future__ import annotations
@@ -248,8 +249,8 @@ def learn_bpe(
     the distinct-word count (one cheap count on the checkpointed
     vocabulary) then picks where the merge LOOP runs:
 
-    - within ``max_driver_vocab`` (the same driver-budget class as the
-      dict encode path's word map and PQ codebooks): collect the
+    - within ``max_driver_vocab`` (the same driver-budget class as
+      PQ codebooks and IVF centroids): collect the
       ``(symbols, count)`` vocabulary and run :func:`_train_bpe_driver`'s
       incremental-pair-count fold (what sentencepiece does). This makes
       realistic merge counts (32k-100k) tractable: per-merge cost is
@@ -402,7 +403,6 @@ def encode_corpus(
     text: str = "text",
     token_ids: DataFrame | None = None,
     unk_id: int = -1,
-    max_dict_vocab: int = 2_000_000,
     alphabet: str = "char",
 ) -> DataFrame:
     """Corpus-scale BPE ENCODE — the tokenize-the-corpus production
@@ -410,30 +410,20 @@ def encode_corpus(
     reference has no tokenizer tier — this is part of the
     LLM-data-pipeline extension surface).
 
-    Scale shape: the merge folds run over the DISTINCT words only
-    (vocabulary-sized, like training; a word repeated a billion times
-    is segmented once; localCheckpoint'd — the merge-deep nested
+    Ids come from ``token_ids`` — pass the saved (symbol, token_id)
+    frame to encode new shards consistently against a frozen
+    tokenizer; symbols absent from a frozen inventory map to
+    ``unk_id``, never silently drop. Without it, the inventory is
+    derived from the corpus itself (:func:`bpe_vocab_ids` over the
+    segmented DISTINCT words — vocabulary-sized, like training; the
+    segmentation is localCheckpoint'd because the merge-deep nested
     aggregate() is cheap to execute but pathologically expensive to
-    re-analyze once a Generate inlines it, measured ~30 s/action of
-    driver time at merges=12). Ids attach per word from ``token_ids``
-    (:func:`bpe_vocab_ids` by default — pass the saved frame to encode
-    new shards consistently against a frozen tokenizer; symbols absent
-    from a frozen inventory map to ``unk_id``, never silently drop).
-
-    The distinct-word count (one cheap count on the checkpointed
-    vocabulary) picks the corpus-side application:
-
-    - within ``max_dict_vocab``: the (word -> ids) map — vocabulary-
-      sized, already materialized — collects to a broadcast dict
-      applied by one Arrow-batched ``mapInPandas`` pass over the
-      JVM-tokenized word arrays (tokenization stays in Catalyst, so
-      both paths see byte-identical tokens): zero shuffles, zero
-      joins. 3M docs x 20 tokens measured 156 s (join) -> 11.6 s
-      (dict).
-    - over it: one corpus-sized equi-join on ``word`` onto the
-      position-exploded corpus + array_sort-ordered per-doc rebuild
-      (no collect-order dependence) — no driver-sized collect at all,
-      for vocabularies too large to broadcast.
+    re-analyze, measured ~30 s/action of driver time at merges=12).
+    That derivation is this function's only job of its own: the
+    encode itself is :func:`encode_stream`'s kernel (one Arrow-batched
+    ``mapInPandas`` pass over the JVM-tokenized word arrays, a
+    per-executor word cache, only the symbol inventory collected to
+    the driver) — so batch and streaming encodes are one code path.
 
     Docs with no tokens (NULL text included) return an empty array.
     Returns
@@ -442,111 +432,28 @@ def encode_corpus(
     from .textstats import tokens
 
     _check_alphabet("encode_corpus", alphabet)
-    tok = docs.select(
-        F.col(id_col), F.posexplode(tokens(text)).alias("pos", "word")
-    )
-    seg = segment_words(
-        tok.select("word").distinct(), merges, alphabet=alphabet
-    ).localCheckpoint(eager=True)
     if token_ids is None:
+        words = docs.select(F.explode(tokens(text)).alias("word")).distinct()
+        seg = segment_words(words, merges, alphabet=alphabet).localCheckpoint(
+            eager=True
+        )
         token_ids = bpe_vocab_ids(seg, alphabet=alphabet)
-    per_word = (
-        seg.select("word", F.posexplode("symbols").alias("spos", "symbol"))
-        # LEFT join + unk coalesce: with a FROZEN token_ids frame an
-        # unseen symbol must surface as unk_id, not silently vanish
-        # from the middle of a document (an inner join here corrupts
-        # every encode containing one novel symbol)
-        .join(token_ids, "symbol", "left")
-        .withColumn("token_id", F.coalesce("token_id", F.lit(unk_id).cast("int")))
-        .groupBy("word")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("spos", "token_id"))),
-                lambda s: s["token_id"],
-            ).alias("ids")
-        )
+    return encode_stream(
+        docs,
+        merges,
+        token_ids,
+        id_col=id_col,
+        text=text,
+        unk_id=unk_id,
+        alphabet=alphabet,
     )
-    if seg.count() <= max_dict_vocab:
-        return _encode_dict(docs, per_word, id_col, text)
-    enc = (
-        tok.join(per_word, "word")
-        .groupBy(id_col)
-        .agg(
-            F.flatten(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "ids"))),
-                    lambda s: s["ids"],
-                )
-            ).alias("token_ids")
-        )
-    )
-    return (
-        docs.select(F.col(id_col))
-        .join(enc, id_col, "left")
-        .select(
-            F.col(id_col),
-            F.coalesce("token_ids", F.array().cast("array<int>")).alias(
-                "token_ids"
-            ),
-        )
-        .withColumn("n_tokens", F.size("token_ids").cast("int"))
-    )
-
-
-def _encode_dict(
-    docs: DataFrame, per_word: DataFrame, id_col: str, text: str
-) -> DataFrame:
-    """Broadcast-dict encode pass: JVM tokenization (byte-identical to
-    the join path's ``tokens()``), one Arrow-batched mapInPandas that
-    flat-maps each word array through the collected (word -> ids) map.
-    The collect is vocabulary-sized — the same driver-budget class as
-    PQ codebooks and IVF centroids elsewhere in the repo."""
-    from pyspark.sql.types import (
-        ArrayType,
-        IntegerType,
-        StructField,
-        StructType,
-    )
-
-    from .textstats import tokens
-
-    mapping = {r["word"]: list(r["ids"]) for r in per_word.collect()}
-    bmap = docs.sparkSession.sparkContext.broadcast(mapping)
-    src = docs.select(F.col(id_col), tokens(text).alias("__words"))
-    out_schema = StructType(
-        [
-            src.schema[id_col],
-            StructField("token_ids", ArrayType(IntegerType(), False), False),
-            StructField("n_tokens", IntegerType(), False),
-        ]
-    )
-
-    def gen(batches):
-        import pandas as pd
-
-        m = bmap.value
-        for pdf in batches:
-            ids = [
-                # NULL text -> NULL token array -> no tokens
-                [i for w in ws for i in m[w]] if ws is not None else []
-                for ws in pdf["__words"]
-            ]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "token_ids": ids,
-                    "n_tokens": [len(x) for x in ids],
-                }
-            )
-
-    return src.mapInPandas(gen, out_schema)
 
 
 def _merge_pair(syms: list[str], a: str, b: str) -> list[str]:
     """One greedy left-to-right merge pass over a symbol list — the
     exact per-word semantics of :func:`apply_bpe_merge`'s JVM fold (a
     merged symbol never re-merges within its pass). Shared by the
-    driver trainer and the streaming/dict encode kernels; JVM==Python
+    driver trainer and the encode kernel; JVM==Python
     equality is pytest-pinned on randomized words."""
     out: list[str] = []
     prev = None
@@ -660,10 +567,7 @@ def _py_apply_ranks(
 # themselves are shared with the broadcast id inventory — and over
 # budget, whole OLDEST caches are evicted first (finished/idle
 # streams), then the current cache resets if it alone exceeds the
-# budget. The per-stream budget is configurable via
-# ``encode_stream(cache_budget_bytes=...)``; with concurrent streams
-# the effective worker bound is the largest configured budget (each
-# stream enforces its own number against the shared total).
+# budget (``_STREAM_CACHE_DEFAULT_BYTES``).
 # Measured at the 3M-doc fixture (20 tokens/doc, 50-word vocab,
 # encode_stream batch mode, ABBA A/B, 4 reps/arm): executor-lifetime
 # median 3.09 s vs per-batch 3.39 s — a real but small ~9% win (3 of 4
@@ -703,7 +607,7 @@ def _stream_word_cache(cache_key: int) -> dict:
 
 
 def _stream_cache_insert(
-    cache_key: int, cache: dict, word: str, ids: list, budget_bytes: int
+    cache_key: int, cache: dict, word: str, ids: list
 ) -> None:
     """Miss-path insert under the worker-wide approximate-byte budget
     (hit-path cost is untouched — one dict get). Evicts whole OLDEST
@@ -714,7 +618,7 @@ def _stream_cache_insert(
     _STREAM_CACHE_SIZES[cache_key] = _STREAM_CACHE_SIZES.get(
         cache_key, 0
     ) + _entry_bytes(word, ids)
-    while sum(_STREAM_CACHE_SIZES.values()) > budget_bytes:
+    while sum(_STREAM_CACHE_SIZES.values()) > _STREAM_CACHE_DEFAULT_BYTES:
         victim = next(
             (k for k in _STREAM_CACHES if k != cache_key), None
         )
@@ -722,7 +626,7 @@ def _stream_cache_insert(
             break
         _STREAM_CACHES.pop(victim, None)
         _STREAM_CACHE_SIZES.pop(victim, None)
-    if _STREAM_CACHE_SIZES.get(cache_key, 0) > budget_bytes:
+    if _STREAM_CACHE_SIZES.get(cache_key, 0) > _STREAM_CACHE_DEFAULT_BYTES:
         cache.clear()
         cache[word] = ids
         _STREAM_CACHE_SIZES[cache_key] = _entry_bytes(word, ids)
@@ -735,30 +639,28 @@ def encode_stream(
     id_col: str = "doc_id",
     text: str = "text",
     unk_id: int = -1,
-    cache_budget_bytes: int = _STREAM_CACHE_DEFAULT_BYTES,
     alphabet: str = "char",
 ) -> DataFrame:
-    """STREAMING BPE encode against a FROZEN tokenizer
-    (:func:`ann_index.load_bpe_tokenizer`) — the ingest-time form of
-    :func:`encode_corpus`, same pattern as ``minhash_match_stream``:
-    fully STATELESS (append-mode safe, no watermark, no state store),
-    so it cannot use the batch path's corpus-wide distinct-word
-    dedup or per-doc groupBy rebuild. Instead: JVM tokenization
-    projection (byte-identical tokens to the batch path), then ONE
+    """BPE encode against a FROZEN tokenizer
+    (:func:`ann_index.load_bpe_tokenizer`) — the one encode kernel,
+    also run by :func:`encode_corpus`; same pattern as
+    ``minhash_match_stream``: fully STATELESS (append-mode safe, no
+    watermark, no state store). JVM tokenization projection, then ONE
     Arrow-batched ``mapInPandas`` whose kernel segments each word by
     merge-RANK priority (:func:`_py_apply_ranks` — cost independent of
     merge-list length, bit-identical to the sequential fold under the
     :func:`_rank_encode_exact` precondition, else the exact sequential
-    fallback) under an executor-lifetime word cache (the streaming
-    form of the batch path's distinct-word amortization — see
-    :data:`_STREAM_CACHES` for the approximate-byte bound
-    (``cache_budget_bytes``), keying, and the measured 3M-doc A/B vs
-    the r12 per-batch cache) and resolves symbol ids from the
-    broadcast frozen inventory — novel symbols surface as ``unk_id``,
-    exactly like the batch path's frozen-id contract.
+    fallback) under an executor-lifetime word cache (distinct-word
+    amortization without a corpus-wide distinct — see
+    :data:`_STREAM_CACHES` for the approximate-byte bound, keying, and
+    the measured 3M-doc A/B vs the r12 per-batch cache) and resolves
+    symbol ids from the broadcast frozen inventory (the only driver
+    collect) — novel symbols surface as ``unk_id``, never silently
+    drop.
 
-    Works identically on a batch frame, so one pipeline definition
-    serves both modes; stream==batch is pytest-pinned.
+    Works identically on a batch frame or a ``readStream`` frame, so
+    one pipeline definition serves both modes; stream==batch is
+    pytest-pinned.
 
     ``alphabet='byte'``: byte-level kernel (see :func:`learn_bpe`) —
     with a byte-mode inventory (:func:`bpe_vocab_ids` seeds all 256
@@ -790,7 +692,6 @@ def encode_stream(
     )
 
     key = next(_STREAM_CACHE_KEYS)
-    budget = int(cache_budget_bytes)
     byte_mode = alphabet == "byte"
 
     def gen(batches):
@@ -820,7 +721,7 @@ def encode_stream(
                     for a, b in merges_:
                         syms = _merge_pair(syms, a, b)
                 got = [ids.get(s, unk) for s in syms]
-                _stream_cache_insert(key, cache, w, got, budget)
+                _stream_cache_insert(key, cache, w, got)
             return got
 
         for pdf in batches:

@@ -1053,11 +1053,11 @@ def remove_duplicate_spans(
     fixture (zero touched docs); on an adversarial every-doc-touched
     fixture the gate costs ~10% (post-anti semi pass over the rebuild's
     own input, see inline comment)."""
-    from .dedup import _fan_out
+    from .util import _fan_out
 
     # the window-gram fold is the CPU-heavy per-row stage (n zip_with
     # passes per doc); fan a small single-split input out to cluster
-    # parallelism first — a no-op at real scale (see dedup._fan_out)
+    # parallelism first — a no-op at real scale (see util._fan_out)
     docs = _fan_out(docs)
     t = tokens(text_col)
     tok = docs.select(

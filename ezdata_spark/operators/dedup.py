@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..cache import track
+from .util import _fan_out
 
 
 def exact_dedup(df: DataFrame, keys: list[str], id_col: str) -> DataFrame:
@@ -35,11 +36,6 @@ def exact_dedup(df: DataFrame, keys: list[str], id_col: str) -> DataFrame:
     return df.groupBy(*keys).agg(
         F.min(id_col).alias("keep_id"), F.count(F.lit(1)).alias("n_copies")
     )
-
-
-def duplicate_groups(df: DataFrame, keys: list[str], id_col: str) -> DataFrame:
-    """Groups with >1 member (find_duplicate semantics, vectorized)."""
-    return exact_dedup(df, keys, id_col).filter(F.col("n_copies") > 1)
 
 
 def _shingles(toks, n: int = 5):
@@ -56,25 +52,6 @@ def _shingles(toks, n: int = 5):
 
 def _tokens(text_col):
     return F.split(F.lower(text_col), r"\s+")
-
-
-def _fan_out(df: DataFrame) -> DataFrame:
-    """Repartition CPU-bound per-row stages up to cluster parallelism.
-
-    A small parquet file arrives as 1-2 partitions (bytes-based split),
-    which serializes compute-heavy stages like shingle hashing on a
-    many-core executor; the shuffle of the raw rows costs far less than
-    the single-threaded hashing. At real scale (many files / row
-    groups) the input already has enough partitions and this is a no-op.
-    Streaming frames pass through untouched (no .rdd on a stream; the
-    micro-batch source picks its own parallelism).
-    """
-    if df.isStreaming:
-        return df
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
 
 
 def minhash_signatures(

@@ -46,8 +46,7 @@ def heavy_hitters(
     k: int = 10,
     summary_size: int | None = None,
     count_col: str = "n",
-    materialize: bool = True,
-) -> "DataFrame | tuple[DataFrame, int]":
+) -> DataFrame:
     """Exact top-``k`` most frequent values of ``df[col]`` with their
     exact counts, ordered by (count desc, value asc). NULLs (and NaNs
     for floating columns) are excluded.
@@ -59,21 +58,11 @@ def heavy_hitters(
     fallback. Larger m = more candidates shuffled (still bounded by
     partitions x m), fewer fallbacks.
 
-    ``materialize`` (default True) makes the EAGER action explicit at
-    call sites: the exactness guarantee check must run the candidate
-    aggregate anyway, so the default returns a LOCAL (already
+    The call is EAGER: the exactness guarantee check must run the
+    candidate aggregate anyway, so it returns a LOCAL (already
     materialized) k-row DataFrame — re-running the two-pass plan on
     every downstream action would re-scan the corpus for a k-row
-    result. ``materialize=False`` returns ``(plan, bound)``: the LAZY
-    candidates-only aggregate plan (self-contained: the collected
-    candidate values ride a broadcast-joined literal frame) plus the
-    Misra-Gries error bound D as a plain int — a tuple, not a
-    DataFrame attribute, so composing/caching the plan cannot silently
-    lose the bound. The summary scan still runs eagerly (the
-    candidates define the plan), but the corpus-sized exact pass
-    defers to the caller's action, and NO guarantee check or exact
-    fallback runs: the caller owns verifying ``kth_count > bound`` if
-    exactness matters.
+    result.
     """
     import numpy as np
     import pandas as pd
@@ -124,23 +113,6 @@ def heavy_hitters(
         # D: max possible global count of any value outside the
         # candidate set (sum of per-partition decrement totals)
         D = summ.where("is_bound").agg(F.sum("mg")).collect()[0][0] or 0
-        if not materialize:
-            # self-contained lazy plan: candidates become a literal
-            # frame so the plan does not reference the (about to be
-            # unpersisted) summary — a re-run would re-scan the corpus
-            # for the summary otherwise
-            cand_rows = (
-                summ.where(~F.col("is_bound")).select("value").distinct().collect()
-            )
-            cand_lit = spark.createDataFrame(cand_rows, f"value {dtype}")
-            lazy = (
-                src.join(F.broadcast(cand_lit), "value", "left_semi")
-                .groupBy("value")
-                .agg(F.count(F.lit(1)).alias(count_col))
-                .orderBy(F.col(count_col).desc(), F.col("value").asc())
-                .limit(k)
-            )
-            return lazy, int(D)
         cand = summ.where(~F.col("is_bound")).select("value").distinct()
         counts = (
             src.join(F.broadcast(cand), "value", "left_semi")

@@ -22,6 +22,8 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .util import _fan_out
+
 
 def _dot(a, b):
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v)
@@ -74,19 +76,6 @@ def cosine_topk(
         .filter(F.col("rank") <= k)
         .select(qid_col, id_col, "cosine", "rank")
     )
-
-
-def _fan_out(df: DataFrame) -> DataFrame:
-    """Repartition CPU-bound per-row stages up to cluster parallelism.
-
-    A small parquet file arrives as 1-2 partitions (bytes-based split),
-    which serializes the interpreted-HOF bucket/dot stages on a
-    many-core executor. At real scale (many files / row groups) the
-    input already has enough partitions and this is a no-op."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
 
 
 def random_hyperplanes(dim: int, n_planes: int = 12, seed: int = 42) -> list[list[float]]:

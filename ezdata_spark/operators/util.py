@@ -19,3 +19,22 @@ def capped_distinct(df: DataFrame, col: str, cap: int, what: str, hint: str) -> 
             f"{hint} Raise the cap to override deliberately."
         )
     return [r[0] for r in probe]
+
+
+def _fan_out(df: DataFrame) -> DataFrame:
+    """Repartition CPU-bound per-row stages up to cluster parallelism.
+
+    A small parquet file arrives as 1-2 partitions (bytes-based split),
+    which serializes compute-heavy stages like shingle hashing on a
+    many-core executor; the shuffle of the raw rows costs far less than
+    the single-threaded hashing. At real scale (many files / row
+    groups) the input already has enough partitions and this is a no-op.
+    Streaming frames pass through untouched (no .rdd on a stream; the
+    micro-batch source picks its own parallelism).
+    """
+    if df.isStreaming:
+        return df
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() < target:
+        return df.repartition(target)
+    return df

@@ -30,8 +30,8 @@ def _rt_path(kind: str, filename: str) -> str:
     """Deterministic scratch path for round-trip fixture files: bench
     reps and the oracle gate re-run q97-q99 many times per session, so
     a fresh mkdtemp per call would accumulate in /tmp. One dir per
-    (user, kind) — the sinks' atomic tmp-then-replace makes re-writes
-    safe to overwrite."""
+    (user, kind) — the sinks write through binary_tables.write_atomic
+    (temp file, then rename), so re-writes are safe to overwrite."""
     import os
     import tempfile
 
@@ -3163,13 +3163,12 @@ def q156(spark, sf_dir):
 @query("z157_bpe_encode")
 def q157(spark, sf_dir):
     """Corpus-scale BPE ENCODE (operators/bpe.py::encode_corpus) — the
-    tokenize-the-corpus production step after learn_bpe: merge folds
-    run over DISTINCT words only (vocabulary-sized, a word repeated a
-    billion times segments once), deterministic lexicographic token
-    ids (bpe_vocab_ids — shards sharing the merge list encode
-    identically), one corpus-sized equi-join back onto the
-    position-exploded docs, order restored by array_sort (no
-    collect-order dependence). Rows-only (the iterative merge
+    tokenize-the-corpus production step after learn_bpe: deterministic
+    lexicographic token ids derived from the corpus's DISTINCT words
+    (bpe_vocab_ids — shards sharing the merge list encode
+    identically), then encode_stream's kernel: one Arrow-batched pass
+    over the tokenized docs, each distinct word segmented once per
+    executor under a word cache. Rows-only (the iterative merge
     learning is not SQL-expressible); tests/test_round12.py pins the
     encoding against a pure-Python BPE reference (losslessness,
     ordering, id stability, empty-doc handling)."""

@@ -16,6 +16,8 @@ and bounded per-task memory.
 
 from __future__ import annotations
 
+import contextlib
+import os
 from collections.abc import Callable, Iterator
 
 import pandas as pd
@@ -82,6 +84,57 @@ def ingest_chunked(
                 yield read_chunk(row["path"], int(row["start"]), int(row["stop"]))
 
     return task_df.mapInPandas(_read, schema)
+
+
+def write_atomic(path: str, data: bytes | str) -> None:
+    """Write ``data`` (str is UTF-8 encoded) to ``path`` all-or-nothing:
+    into a sibling temp file, then ``os.replace`` onto the target — a
+    reader (or a failed rewrite) never sees a torn file. The temp file
+    is removed when the write fails. Every file the engine writes
+    itself goes through here; callers encode first, so an encoding
+    error never reaches the disk."""
+    if isinstance(data, str):
+        data = data.encode("utf-8")
+    tmp = f"{path}.tmp-{os.getpid()}"
+    try:
+        with open(tmp, "wb") as fh:
+            fh.write(data)
+        os.replace(tmp, path)
+    except BaseException:
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(tmp)
+        raise
+
+
+def write_shards(
+    df: DataFrame,
+    dir_path: str,
+    suffix: str,
+    encode: Callable[[pd.DataFrame], bytes],
+) -> list[dict]:
+    """Distributed single-format export: every partition encodes its
+    rows with ``encode(pdf) -> bytes`` and writes
+    ``part-NNNNN{suffix}`` executor-side (mapInPandas — Arrow batches,
+    no driver collect) through :func:`write_atomic`. Size the shards
+    with ``df.repartition(n)`` before calling. Returns the manifest
+    [(file, rows, n_bytes)]."""
+    from pyspark import TaskContext
+
+    os.makedirs(dir_path, exist_ok=True)
+
+    def _write(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        pdfs = list(batches)
+        if not pdfs:
+            return
+        pdf = pdfs[0] if len(pdfs) == 1 else pd.concat(pdfs, ignore_index=True)
+        pid = TaskContext.get().partitionId()
+        path = os.path.join(dir_path, f"part-{pid:05d}{suffix}")
+        blob = encode(pdf)
+        write_atomic(path, blob)
+        yield pd.DataFrame([{"file": path, "rows": len(pdf), "n_bytes": len(blob)}])
+
+    manifest = df.mapInPandas(_write, "file string, rows long, n_bytes long")
+    return [r.asDict() for r in manifest.collect()]
 
 
 def read_hdf5(
@@ -220,8 +273,7 @@ def to_latex(t, n: int = 30, name: str | None = None) -> str:
 def write_latex(t, path: str, n: int = 30, name: str | None = None) -> None:
     """File form of ``to_latex`` (the reference's writeto('*.tex')
     dispatch, simpletable.py:792)."""
-    with open(path, "w") as fh:
-        fh.write(to_latex(t, n=n, name=name))
+    write_atomic(path, to_latex(t, n=n, name=name))
 
 
 def from_dict(spark: SparkSession, data: dict, **meta):

@@ -13,7 +13,7 @@ my big tables pre-sorted by key".
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(
@@ -36,10 +36,6 @@ def write_bucketed(
         sk = [sort_by] if isinstance(sort_by, str) else list(sort_by)
         w = w.sortBy(*sk)
     w.saveAsTable(table_name)
-
-
-def read_table(spark: SparkSession, table_name: str) -> DataFrame:
-    return spark.table(table_name)
 
 
 def is_shuffle_free_join(joined: DataFrame) -> bool:

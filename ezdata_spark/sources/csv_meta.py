@@ -23,6 +23,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from ..table import EzTable
+from .binary_tables import write_atomic
 
 HEADER_PREFIX = "#"
 
@@ -147,14 +148,11 @@ def write_csv(t: EzTable, path: str, sep: str = ",", single_file: bool = False) 
         tmp = path + ".tmp_parts"
         t.df.coalesce(1).write.mode("overwrite").option("sep", sep).csv(tmp)
         part = glob.glob(os.path.join(tmp, "part-*.csv"))[0]
-        with open(path, "w", encoding="utf-8") as out:
-            out.write(_gen_header(t))
-            with open(part, "r", encoding="utf-8") as fh:
-                out.write(fh.read())
+        with open(part, "r", encoding="utf-8") as fh:
+            write_atomic(path, _gen_header(t) + fh.read())
         import shutil
 
         shutil.rmtree(tmp)
     else:
         t.df.write.mode("overwrite").option("sep", sep).csv(path)
-        with open(os.path.join(path, "_header"), "w", encoding="utf-8") as out:
-            out.write(_gen_header(t))
+        write_atomic(os.path.join(path, "_header"), _gen_header(t))

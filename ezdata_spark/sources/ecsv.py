@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..table import EzTable
+from .binary_tables import write_atomic
 
 _DTYPES = {
     "bool": T.BooleanType(),
@@ -142,20 +143,14 @@ def write_ecsv(t: EzTable, path: str, **meta) -> None:
         spec["meta"] = full_meta
 
     yaml_text = yaml.safe_dump(spec, sort_keys=False, default_flow_style=False)
-    rows = df.toPandas()
     import csv as _csv
 
-    with open(path, "w", encoding="utf-8") as out:
-        out.write("# %ECSV 1.0\n")
-        out.write("# ---\n")
-        for line in yaml_text.splitlines():
-            out.write(f"# {line}\n")
-        # quote non-numeric fields: an unquoted string value starting
-        # with '#' would be eaten by the reader's comment option
-        rows.to_csv(out, index=False, lineterminator="\n", quoting=_csv.QUOTE_NONNUMERIC)
-
-
-def json_array_column(df, col: str, element_type: str = "float") -> "F.Column":
-    """Helper for the ECSV vector-column convention anywhere: JSON string
-    -> array<element_type> (ecsv.py:63-77 converter)."""
-    return F.from_json(F.col(col), T.ArrayType(_DTYPES.get(element_type, T.DoubleType())))
+    header = "# %ECSV 1.0\n# ---\n" + "".join(
+        f"# {line}\n" for line in yaml_text.splitlines()
+    )
+    # quote non-numeric fields: an unquoted string value starting
+    # with '#' would be eaten by the reader's comment option
+    body = df.toPandas().to_csv(
+        index=False, lineterminator="\n", quoting=_csv.QUOTE_NONNUMERIC
+    )
+    write_atomic(path, header + body)

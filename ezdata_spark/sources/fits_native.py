@@ -25,13 +25,14 @@ simpletable.py:1612-1637).
 
 from __future__ import annotations
 
-import os
 from typing import Any
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from .binary_tables import ingest_chunked, write_atomic, write_shards
 
 BLOCK = 2880
 CARD = 80
@@ -281,7 +282,6 @@ def scan_fits(
     for simpletable.py:1523-1538). Returns an EzTable with TUNITn
     carried into units metadata."""
     from ..table import EzTable
-    from .binary_tables import ingest_chunked
 
     if isinstance(files, str):
         files = [files]
@@ -463,11 +463,7 @@ def write_fits(t, path: str, units: dict | None = None) -> None:
     df: DataFrame = getattr(t, "df", t)
     if units is None:
         units = dict(getattr(t, "units", {}) or {})
-    blob = encode_fits(_collect_pdf(df), df.schema, units)
-    tmp = f"{path}.tmp-{os.getpid()}"
-    with open(tmp, "wb") as f:
-        f.write(blob)
-    os.replace(tmp, path)
+    write_atomic(path, encode_fits(_collect_pdf(df), df.schema, units))
 
 
 def write_fits_sharded(t, dir_path: str, units: dict | None = None) -> list[dict]:
@@ -482,28 +478,10 @@ def write_fits_sharded(t, dir_path: str, units: dict | None = None) -> list[dict
     from each shard's data), which the multi-file scan honors — chunk
     decode re-reads each file's own header.
     """
-    import pandas as pd
-    from pyspark import TaskContext
-
     df: DataFrame = getattr(t, "df", t)
     if units is None:
         units = dict(getattr(t, "units", {}) or {})
-    os.makedirs(dir_path, exist_ok=True)
     schema = df.schema
-
-    def _write(batches):
-        pdfs = list(batches)
-        if not pdfs:
-            return
-        pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
-        pid = TaskContext.get().partitionId()
-        path = os.path.join(dir_path, f"part-{pid:05d}.fits")
-        blob = encode_fits(pdf, schema, units)
-        tmp = f"{path}.tmp-{os.getpid()}"
-        with open(tmp, "wb") as f:
-            f.write(blob)
-        os.replace(tmp, path)
-        yield pd.DataFrame([{"file": path, "rows": len(pdf), "n_bytes": len(blob)}])
-
-    manifest = df.mapInPandas(_write, "file string, rows long, n_bytes long")
-    return [r.asDict() for r in manifest.collect()]
+    return write_shards(
+        df, dir_path, ".fits", lambda pdf: encode_fits(pdf, schema, units)
+    )

@@ -32,13 +32,14 @@ Parquet remains the scale sink.
 
 from __future__ import annotations
 
-import os
 import struct
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from .binary_tables import ingest_chunked, write_atomic, write_shards
 
 SIG = b"\x89HDF\r\n\x1a\n"
 UNDEF = 0xFFFFFFFFFFFFFFFF
@@ -382,7 +383,6 @@ def scan_hdf5(
     """Distributed HDF5 table scan (pure numpy; h5py-free parity for
     simpletable.py:1539-1550 / dask/hdf5.py:199-283). Returns an EzTable."""
     from ..table import EzTable
-    from .binary_tables import ingest_chunked
 
     if isinstance(files, str):
         files = [files]
@@ -613,11 +613,7 @@ def write_hdf5(t, path: str, dataset: str = "data") -> None:
     convention), float nulls become NaN.
     """
     df: DataFrame = getattr(t, "df", t)
-    blob = encode_hdf5(_pdf_to_rec(df.toPandas(), df.schema), dataset)
-    tmp = f"{path}.tmp-{os.getpid()}"
-    with open(tmp, "wb") as f:
-        f.write(blob)
-    os.replace(tmp, path)
+    write_atomic(path, encode_hdf5(_pdf_to_rec(df.toPandas(), df.schema), dataset))
 
 
 def write_hdf5_sharded(t, dir_path: str, dataset: str = "data") -> list[dict]:
@@ -626,26 +622,8 @@ def write_hdf5_sharded(t, dir_path: str, dataset: str = "data") -> list[dict]:
     collect); ``scan_hdf5`` reads the directory's files back as one
     multi-file archive. Size the shards with ``df.repartition(n)``
     before calling. Returns the manifest [(file, rows, n_bytes)]."""
-    import pandas as pd
-    from pyspark import TaskContext
-
     df: DataFrame = getattr(t, "df", t)
-    os.makedirs(dir_path, exist_ok=True)
     schema = df.schema
-
-    def _write(batches):
-        pdfs = list(batches)
-        if not pdfs:
-            return
-        pdf = pdfs[0] if len(pdfs) == 1 else pd.concat(pdfs, ignore_index=True)
-        pid = TaskContext.get().partitionId()
-        path = os.path.join(dir_path, f"part-{pid:05d}.h5")
-        blob = encode_hdf5(_pdf_to_rec(pdf, schema), dataset)
-        tmp = f"{path}.tmp-{os.getpid()}"
-        with open(tmp, "wb") as f:
-            f.write(blob)
-        os.replace(tmp, path)
-        yield pd.DataFrame([{"file": path, "rows": len(pdf), "n_bytes": len(blob)}])
-
-    manifest = df.mapInPandas(_write, "file string, rows long, n_bytes long")
-    return [r.asDict() for r in manifest.collect()]
+    return write_shards(
+        df, dir_path, ".h5", lambda pdf: encode_hdf5(_pdf_to_rec(pdf, schema), dataset)
+    )

@@ -28,6 +28,8 @@ import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
+from .binary_tables import write_atomic
+
 # IVOA datatype -> (Spark type, python converter)
 _VO_TYPES: dict[str, tuple[T.DataType, type]] = {
     "boolean": (T.BooleanType(), bool),
@@ -430,5 +432,4 @@ def write_votable(t, path: str, serialization: str = "tabledata") -> None:
         # 76-char lines per MIME convention (readers must join whitespace)
         lines.extend(b64[i : i + 76] for i in range(0, len(b64), 76))
         lines.append(f"</STREAM></{tag}></DATA></TABLE></RESOURCE></VOTABLE>")
-    with open(path, "w", encoding="utf-8") as fh:
-        fh.write("\n".join(lines))
+    write_atomic(path, "\n".join(lines))

@@ -139,10 +139,9 @@ class EzTable:
 
             write_jsonl(self, path, **kw)
         elif low.endswith(".tex"):
-            from .sources.binary_tables import to_latex
+            from .sources.binary_tables import write_latex
 
-            with open(path, "w") as fh:
-                fh.write(to_latex(self, **kw))
+            write_latex(self, path, **kw)
         else:
             raise ValueError(f"EzTable.write: unrecognized table extension for {path!r}")
 

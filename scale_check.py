@@ -414,8 +414,8 @@ def main() -> None:
     # r12: corpus-scale BPE encode — merges learned UNTIMED on a
     # bounded sample (training is vocabulary-sized, the persisted-
     # artifact shape like ivf_index); the timed row is the recurring
-    # tokenize-the-corpus cost: distinct-word segmentation + id join
-    # back onto the position-exploded corpus + ordered per-doc rebuild
+    # tokenize-the-corpus cost: distinct-word segmentation for the id
+    # inventory + one Arrow-batched encode pass over the corpus
     if only is None or "bpe_encode" in only:
         from ezdata_spark.operators.bpe import encode_corpus, learn_bpe
 
@@ -427,7 +427,7 @@ def main() -> None:
     # #3) — the driver incremental fold at n_merges=1024. The corpus
     # pass (build_word_vocab) stays corpus-sized and distributed; the
     # merge loop runs over the collected (word,count) vocabulary
-    # (driver-budget, the same class as the dict encode map). Uses a
+    # (driver-budget, the same class as PQ codebooks). Uses a
     # wide-vocab fixture (~200k types, ~8-char words over a 36-symbol
     # alphabet) because the 50-word encode fixture runs dry after
     # O(100) merges; the timed row materializes the final segmented
@@ -822,10 +822,10 @@ def main() -> None:
                     ).alias("embedding"),
                 )
                 from ezdata_spark.operators.similarity import (
-                    _fan_out,
                     _knn_join_pq,
                     _nearest_cells,
                 )
+                from ezdata_spark.operators.util import _fan_out
 
                 # unpruned CONTROL plan: same probes, prune_cells=False
                 # — the round-9 plan that cogrouped every cell's codes

@@ -165,7 +165,8 @@ def test_knn_join_pq_prune_equals_noprune(pq10_fixture):
     is a pure execution-shape change: unprobed cells produce no pairs
     either way, so pruned and unpruned runs must be BIT-IDENTICAL —
     partial probe, both rescore modes."""
-    from ezdata_spark.operators.similarity import _fan_out, _knn_join_pq, _nearest_cells
+    from ezdata_spark.operators.similarity import _knn_join_pq, _nearest_cells
+    from ezdata_spark.operators.util import _fan_out
 
     emb, left, enc, cents, cb, _ = pq10_fixture
     lf = _fan_out(left).select("doc_id", F.col("embedding").alias("qv"))

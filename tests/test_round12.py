@@ -331,13 +331,7 @@ def _py_segment(word, merges):
     return syms
 
 
-# the vocabulary size picks the application: a broadcast dict within
-# max_dict_vocab, the corpus join over it
-@pytest.mark.parametrize(
-    "max_dict_vocab",
-    [pytest.param(2_000_000, id="dict"), pytest.param(0, id="join")],
-)
-def test_encode_corpus_matches_python_reference(spark, max_dict_vocab):
+def test_encode_corpus_matches_python_reference(spark):
     from ezdata_spark.operators.bpe import encode_corpus, learn_bpe
 
     corpus = [
@@ -352,8 +346,7 @@ def test_encode_corpus_matches_python_reference(spark, max_dict_vocab):
     merges, _ = learn_bpe(train, n_merges=10)
 
     got = {r.doc_id: (list(r.token_ids), r.n_tokens)
-           for r in encode_corpus(
-               docs, merges, max_dict_vocab=max_dict_vocab).collect()}
+           for r in encode_corpus(docs, merges).collect()}
 
     # python reference: segment every distinct word, ids by sorted
     # symbol inventory over the ENCODED corpus's segmented vocabulary
@@ -487,12 +480,12 @@ def test_py_apply_merges_matches_jvm_fold(spark):
         assert jvm[w] == _py_apply_merges(w, merges), w
 
 
-def test_encode_stream_batch_mode_equals_encode_corpus(spark):
-    """encode_stream on a batch frame == encode_corpus against the same
-    frozen tokenizer, unk handling included — one pipeline definition,
-    both modes."""
+def test_encode_stream_frozen_matches_python_reference(spark):
+    """encode_stream on a batch frame == the pure-Python reference
+    against the same frozen tokenizer: _py_segment symbols looked up in
+    the frozen inventory, unseen symbols -> unk_id."""
     from ezdata_spark.operators.bpe import (
-        bpe_vocab_ids, encode_corpus, encode_stream, learn_bpe,
+        bpe_vocab_ids, encode_stream, learn_bpe,
     )
 
     train = spark.createDataFrame(
@@ -500,15 +493,19 @@ def test_encode_stream_batch_mode_equals_encode_corpus(spark):
     )
     merges, vocab = learn_bpe(train, n_merges=8)
     frozen = bpe_vocab_ids(vocab)
-    shard = spark.createDataFrame(
-        [(1, "lowest newest unseen"), (2, "   "), (3, "low widest"), (4, None)],
-        "doc_id long, text string",
-    )
-    want = {r.doc_id: (list(r.token_ids), r.n_tokens) for r in encode_corpus(
-        shard, merges, token_ids=frozen, unk_id=-5).collect()}
+    corpus = [(1, "lowest newest unseen"), (2, "   "), (3, "low widest"), (4, None)]
+    shard = spark.createDataFrame(corpus, "doc_id long, text string")
     got = {r.doc_id: (list(r.token_ids), r.n_tokens) for r in encode_stream(
         shard, merges, frozen, unk_id=-5).collect()}
+
+    sid = {r.symbol: r.token_id for r in frozen.collect()}
+    want = {}
+    for did, t in corpus:
+        ids = [sid.get(s, -5) for w in (t or "").lower().split()
+               for s in _py_segment(w, merges)]
+        want[did] = (ids, len(ids))
     assert got == want
+    assert -5 in got[1][0]  # 'unseen' carries symbols the inventory lacks
     assert got[2] == ([], 0)
     assert got[4] == ([], 0)  # NULL text encodes as no tokens
 

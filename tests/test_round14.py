@@ -335,7 +335,7 @@ def test_byte_rank_encode_exact_base_len():
 # ------------------------------------------------------------- cache budget
 
 
-def test_stream_cache_byte_budget_evicts_oldest_then_resets():
+def test_stream_cache_byte_budget_evicts_oldest_then_resets(monkeypatch):
     """ADVICE r13 (medium): the executor-lifetime word caches are
     bounded by an approximate-byte budget — over budget, whole OLDEST
     caches are evicted first, and the current cache resets only when
@@ -349,20 +349,21 @@ def test_stream_cache_byte_budget_evicts_oldest_then_resets():
         c1 = bpe._stream_word_cache(k1)
         c2 = bpe._stream_word_cache(k2)
         e = bpe._entry_bytes("word0", [1, 2, 3])
-        budget = 5 * e  # room for ~5 entries total
+        # room for ~5 entries total
+        monkeypatch.setattr(bpe, "_STREAM_CACHE_DEFAULT_BYTES", 5 * e)
         for i in range(3):
-            bpe._stream_cache_insert(k1, c1, f"old{i}", [1, 2, 3], budget)
+            bpe._stream_cache_insert(k1, c1, f"old{i}", [1, 2, 3])
         assert len(c1) == 3
         # the newer stream's inserts push the total over budget: the
         # OLDEST cache (k1) is evicted wholesale, k2 keeps its entries
         for i in range(4):
-            bpe._stream_cache_insert(k2, c2, f"new{i}!", [1, 2, 3], budget)
+            bpe._stream_cache_insert(k2, c2, f"new{i}!", [1, 2, 3])
         assert k1 not in bpe._STREAM_CACHES
         assert len(c2) == 4
         # a single cache exceeding the budget alone resets, keeping
         # the just-inserted entry
         for i in range(4, 9):
-            bpe._stream_cache_insert(k2, c2, f"new{i}!", [1, 2, 3], budget)
+            bpe._stream_cache_insert(k2, c2, f"new{i}!", [1, 2, 3])
         assert len(c2) < 9 and "new8!" in c2
         assert bpe._STREAM_CACHE_SIZES[k2] == sum(
             bpe._entry_bytes(w, ids) for w, ids in c2.items()

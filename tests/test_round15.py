@@ -268,3 +268,67 @@ def test_engine_size_rules_switch_at_documented_boundary(spark, sf_dir, name):
 
     assert "MapInPandas" not in plan(below)
     assert "MapInPandas" in plan(above)
+
+
+# ------------------------------------------------ atomic file writes
+def _assert_failed_rewrite_keeps_old_file(path, rewrite, exc):
+    """``rewrite`` fails part-way: the previous file must survive byte
+    for byte and no temp sibling may be left behind."""
+    with open(path, "rb") as fh:
+        before = fh.read()
+    with pytest.raises(exc):
+        rewrite()
+    with open(path, "rb") as fh:
+        assert fh.read() == before
+    leftovers = [f for f in os.listdir(os.path.dirname(path)) if ".tmp-" in f]
+    assert leftovers == []
+
+
+def test_failed_ecsv_rewrite_keeps_old_file(spark, tmp_path, monkeypatch):
+    import pandas as pd
+
+    from ezdata_spark.sources.ecsv import write_ecsv
+    from ezdata_spark.table import EzTable
+
+    t = EzTable(spark.createDataFrame([(1, "a"), (2, "b")], "k long, s string"))
+    path = str(tmp_path / "t.ecsv")
+    write_ecsv(t, path)
+
+    def torn_to_csv(self, path_or_buf=None, *args, **kwargs):
+        if path_or_buf is not None:
+            path_or_buf.write('"k","s"\n1,')  # part of the body, then fail
+        raise RuntimeError("injected")
+
+    monkeypatch.setattr(pd.DataFrame, "to_csv", torn_to_csv)
+    _assert_failed_rewrite_keeps_old_file(
+        path, lambda: write_ecsv(t, path), RuntimeError
+    )
+
+
+def test_failed_sidecar_rewrite_keeps_old_sidecar(spark, tmp_path):
+    from ezdata_spark.operators.ann_index import load_ann_index, save_ann_index
+
+    path = str(tmp_path / "idx")
+    save_ann_index(path, meta={"kind": "pq", "codebooks": [[[0.5, 1.5]]]})
+    _assert_failed_rewrite_keeps_old_file(
+        os.path.join(path, "_ann_meta.json"),
+        lambda: save_ann_index(path, meta={"kind": "pq", "bad": object()}),
+        TypeError,
+    )
+    assert load_ann_index(spark, path)[1]["codebooks"] == [[[0.5, 1.5]]]
+
+
+def test_failed_fits_rename_removes_temp_file(spark, tmp_path, monkeypatch):
+    from ezdata_spark.sources.fits_native import write_fits
+
+    path = str(tmp_path / "t.fits")
+    write_fits(spark.createDataFrame([(1, 2.5)], "k long, x double"), path)
+    new = spark.createDataFrame([(2, 3.5), (3, 4.5)], "k long, x double")
+
+    def no_rename(src, dst):
+        raise OSError("injected")
+
+    monkeypatch.setattr(os, "replace", no_rename)
+    _assert_failed_rewrite_keeps_old_file(
+        path, lambda: write_fits(new, path), OSError
+    )

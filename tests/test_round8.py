@@ -1,5 +1,4 @@
-"""Round-8 regression tests: the four round-7 ADVICE findings plus the
-heavy_hitters composability flag.
+"""Round-8 regression tests: the round-7 ADVICE findings.
 
 1. audio_metadata WAV duration must come from the fmt chunk's byte_rate
    (exact for compressed payloads: IMA-ADPCM bits=4 would otherwise
@@ -10,9 +9,6 @@ heavy_hitters composability flag.
    desync the reader for every subsequent cell in the stream.
 3. mpeg_audio_meta must not count a Xing/Info/VBRI tag frame as audio,
    and must prefer the tag's declared frame count for duration.
-4. heavy_hitters(materialize=False) returns a LAZY candidates-only plan
-   with the error bound attached as metadata; results match the
-   materialized path.
 """
 
 from __future__ import annotations
@@ -876,41 +872,3 @@ def test_opq_composes_with_pq_knn_join(spark):
                     pq_codebooks=cbs, pq_oversample=20).collect()}
     recall = len(raw & got) / len(raw)
     assert recall >= 0.95, recall
-
-
-# ------------------------------------------------------- heavy_hitters flag
-def test_heavy_hitters_lazy_matches_materialized(spark):
-    from pyspark.sql import functions as F
-
-    from ezdata_spark.operators.frequent import heavy_hitters
-
-    df = spark.range(20_000).select(
-        F.concat(F.lit("t"), F.pmod(F.xxhash64("id"), F.lit(40)).cast("string")).alias(
-            "tok"
-        )
-    )
-    eager = heavy_hitters(df, "tok", k=8)
-    lazy, bound = heavy_hitters(df, "tok", k=8, materialize=False)
-    assert bound >= 0
-    got_e = [(r.value, r.n) for r in eager.collect()]
-    got_l = [(r.value, r.n) for r in lazy.collect()]
-    assert got_e == got_l
-    # lazy plan is composable: a further transformation works without
-    # re-running the summary pass driver-side (and the bound, being a
-    # plain int, cannot be lost by the composition)
-    assert lazy.filter(F.col("n") > 0).count() == 8
-
-
-def test_heavy_hitters_lazy_bound_guarantee(spark):
-    # skewed data with a generous summary: bound 0 -> provably exact
-    from pyspark.sql import functions as F
-
-    from ezdata_spark.operators.frequent import heavy_hitters
-
-    df = spark.range(5_000).select(
-        F.pmod(F.col("id"), F.lit(5)).cast("string").alias("tok")
-    )
-    lazy, bound = heavy_hitters(df, "tok", k=3, summary_size=64, materialize=False)
-    rows = lazy.collect()
-    assert rows[0].n >= rows[-1].n
-    assert rows[-1].n > bound  # caller-side exactness check
